@@ -79,40 +79,6 @@ def doc_id_py(doc_key: str) -> int:
     return int(hashlib.sha256(doc_key.encode()).hexdigest()[:15], 16)
 
 
-def _pack_rows(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Pack a term-sorted frame into one partial row per term.
-
-    Fully vectorized: one lexsort (rows arrive (term, salt, doc_id)-sorted,
-    not (term, doc_id)-sorted — salt sub-runs must interleave), one delta
-    pass, and ONE varint-encode pass per column with per-group byte
-    slicing. No per-group numpy calls.
-    """
-    import numpy as np
-
-    terms = pdf["term"].to_numpy()
-    ids = pdf["doc_id"].to_numpy(dtype="int64")
-    tfs = pdf["tf"].to_numpy(dtype="int64")
-    dls = pdf["dl"].to_numpy(dtype="int64")
-    change = np.empty(terms.size, dtype=bool)
-    change[0] = True
-    np.not_equal(terms[1:], terms[:-1], out=change[1:])
-    gidx = np.cumsum(change) - 1
-    order = np.lexsort((ids, gidx))
-    ids, tfs, dls = ids[order], tfs[order], dls[order]
-    starts = np.nonzero(change)[0]  # group boundaries invariant under sort
-    deltas = ids.copy()
-    deltas[1:] -= ids[:-1]
-    deltas[starts] = ids[starts]
-    return pd.DataFrame(
-        {
-            "term": terms[starts],
-            "doc_ids": codec.varint_encode_grouped(deltas.astype("uint64"), starts),
-            "tfs": codec.varint_encode_grouped(tfs.astype("uint64"), starts),
-            "dls": codec.varint_encode_grouped(dls.astype("uint64"), starts),
-        }
-    )
-
-
 def _stream_groups(batches: Iterator[pd.DataFrame], key):
     """Re-chunk an ordered batch stream so no key group spans two yields.
 
@@ -142,13 +108,6 @@ def _stream_groups(batches: Iterator[pd.DataFrame], key):
         yield b.iloc[:split]
     if carry is not None and len(carry):
         yield carry
-
-
-def _pack_partial_stream(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    for chunk in _stream_groups(batches, "term"):
-        yield _pack_rows(chunk)
 
 
 def _pack_docs_direct(batches):
@@ -362,33 +321,6 @@ def build_segment_postings_from_docs(
     partial = analyzed.select("doc_id", "dl", "tokens").mapInArrow(
         _pack_docs_direct, schema=PARTIAL_SCHEMA
     )
-    l2 = partial.repartition(
-        max(2, config.shuffle_partitions // 4), "term"
-    ).sortWithinPartitions("term")
-    return l2.mapInPandas(
-        _make_merge_stream(seg_name, config.block_size), schema=POSTINGS_SCHEMA
-    )
-
-
-def build_segment_postings(
-    doc_term_df: DataFrame, seg_name: str, config: EngineConfig
-) -> DataFrame:
-    """(doc_id, dl, term, tf) → packed postings rows (POSTINGS_SCHEMA).
-
-    Two sort-based levels, one Python invocation per *partition* (not per
-    group): level 1 hash-partitions on (term, salt(doc_id)) — bounding the
-    largest reducer for stopword terms — and stream-packs sorted runs;
-    level 2 hash-partitions partials on term and stream-merges. Both
-    shuffles carry packed binary, so level 2 moves ~salt_partitions rows
-    per term regardless of posting-list length.
-    """
-    salted = doc_term_df.withColumn(
-        "_salt", F.pmod(F.col("doc_id"), F.lit(config.salt_partitions))
-    )
-    l1 = salted.repartition(
-        config.shuffle_partitions, "term", "_salt"
-    ).sortWithinPartitions("term", "_salt", "doc_id")
-    partial = l1.mapInPandas(_pack_partial_stream, schema=PARTIAL_SCHEMA)
     l2 = partial.repartition(
         max(2, config.shuffle_partitions // 4), "term"
     ).sortWithinPartitions("term")

@@ -1,18 +1,32 @@
 """Log-structured segment merge (SURVEY.md D3) + index-level deletes (W3).
 
 Mirrors Lucene's merge behind the reference's bulk flushes: k immutable
-segments are rewritten into one, with document-level latest-wins across
-generations (a doc re-ingested into a newer segment shadows its older
-posting entries — the index-level continuation of the connector's external
-versioning, W4) and optional tombstone deletes applied during the rewrite.
+segments are rewritten into one that keeps exactly one copy of each
+document — the copy from the newest commit (segment ``seq``, see
+segments.py), the index-level continuation of the connector's external
+versioning (W4) — minus any tombstoned documents.
 
-Execution shape (scales like the initial build — merge cost is O(postings)
-with the same salted two-level aggregation, no driver materialization):
+Every caller (``reconcile_updates``, ``auto_merge``, streaming
+backpressure, tombstone deletes) runs the same shape. The stored packed
+rows move as they are; nothing is exploded to one row per posting:
 
-  postings(seg k..n) → mapInPandas decode-explode → (term, doc_id, tf, dl)
-    → anti-join losers (docs shadowed by newer segments) and deletes
-    → groupBy(term, salt) / groupBy(term) re-pack → new segment
-    → manifest entry with ``replaces=[old segments]`` (atomic commit)
+  losers    (seg, doc_id, dl) of every copy the merge drops: the older
+            copies of a re-ingested doc and the tombstoned docs. Callers
+            that know them pass them in (reconcile's driver-side probe);
+            otherwise one ids-only Spark job finds the duplicated doc ids
+            and the driver ranks their copies by (seq, segment name).
+  docs      union of the inputs' docs, minus the losers (a per-segment
+            ``doc_id IN (...)`` filter in the scan stage).
+  postings  stored packed rows → mapInArrow loser filter (a row holding a
+            loser is decoded, filtered and re-encoded as a level-1
+            partial; every other row passes through byte-identical)
+            → repartition(term) → the build's level-2 sorted-run merge
+            (indexer._make_merge_stream rebuilds df/max_tf/block_max).
+  positions per-doc blobs minus the losers (the same filter), re-packed
+            with fresh skip data (positions.repack_positions).
+  commit    one manifest entry with ``replaces=[inputs]``; doc stats are
+            manifest arithmetic minus the losers' count and Σdl, term
+            stats ride the postings write as an Observation.
 
 Old segment directories are left in place (immutable); the manifest marks
 them dead, so a crashed merge is invisible and a re-run is idempotent —
@@ -23,25 +37,28 @@ from __future__ import annotations
 
 import time
 import uuid
-from collections.abc import Iterator
 
+import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from kafka_connect_opensearch_spark.config import EngineConfig
 from kafka_connect_opensearch_spark.operators import postings as codec
 from kafka_connect_opensearch_spark.operators.indexer import (
-    build_segment_postings,
+    PARTIAL_COLS,
+    PARTIAL_SCHEMA,
+    _make_merge_stream,
 )
 from kafka_connect_opensearch_spark.operators.segments import (
+    DOCS_COLUMNS,
+    POSTINGS_SCHEMA,
     BuildMetrics,
     SegmentMeta,
     SegmentStore,
 )
 from kafka_connect_opensearch_spark.retry import call_with_retries
-
-DECODED_SCHEMA = "term string, _segname string, doc_id long, tf long, dl long"
 
 
 def tiered_merge_candidates(
@@ -96,44 +113,152 @@ def auto_merge(
     return total
 
 
-def decode_postings_df(postings: DataFrame) -> DataFrame:
-    """Packed postings rows → exploded (term, seg, doc_id, tf, dl) rows.
+def _scan_docs(
+    store: SegmentStore,
+    metas: list[SegmentMeta],
+    field: str | None = None,
+    values=(),
+) -> pd.DataFrame:
+    """(seg, doc_id, dl) of the docs of ``metas`` — all of them when
+    ``field`` is None, else those whose ``field`` is in ``values``. A
+    driver-side pyarrow scan of each segment's docs files that applies the
+    filter while streaming, so memory is bounded by the matches. Starts no
+    Spark job."""
+    import pyarrow.dataset as pads
 
-    mapInPandas so decoding is per-Arrow-batch numpy, not per-row Python.
-    The segment name travels in the stored ``seg`` column.
-    """
+    segs, ids, dls = [], [np.empty(0, dtype=np.int64)], [
+        np.empty(0, dtype=np.int64)]
+    if field is None or len(values):
+        flt = None if field is None else pads.field(field).isin(
+            pa.array(values))
+        for m in metas:
+            if m.doc_count == 0:
+                continue  # an empty wave segment writes no files
+            t = pads.dataset(
+                store.segment_files(m, "docs"), format="parquet"
+            ).to_table(columns=["doc_id", "dl"], filter=flt)
+            segs += [m.name] * t.num_rows
+            ids.append(t["doc_id"].to_numpy().astype(np.int64))
+            dls.append(t["dl"].to_numpy().astype(np.int64))
+    return pd.DataFrame({"seg": pd.Series(segs, dtype=object),
+                         "doc_id": np.concatenate(ids),
+                         "dl": np.concatenate(dls)})
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
 
-        for b in batches:
-            if not len(b):
-                continue
-            d_vals, d_row = codec.varint_decode_concat(list(b["doc_ids"]))
-            t_vals, _ = codec.varint_decode_concat(list(b["tfs"]))
-            l_vals, _ = codec.varint_decode_concat(list(b["dls"]))
-            if d_vals.size == 0:
-                continue
-            run_change = np.empty(d_row.size, dtype=bool)
-            run_change[0] = True
-            np.not_equal(d_row[1:], d_row[:-1], out=run_change[1:])
-            ids = codec.cumsum_with_resets(
-                d_vals, np.nonzero(run_change)[0]
-            )
-            counts = np.bincount(d_row, minlength=len(b))
-            yield pd.DataFrame(
-                {
-                    "term": np.repeat(b["term"].to_numpy(), counts),
-                    "_segname": np.repeat(b["seg"].to_numpy(), counts),
-                    "doc_id": ids,
-                    "tf": t_vals.astype("int64"),
-                    "dl": l_vals.astype("int64"),
-                }
-            )
+def resolve_losers(
+    store: SegmentStore, metas: list[SegmentMeta], doc_ids
+) -> tuple[pd.DataFrame, list[str]]:
+    """Rank every copy of ``doc_ids`` held by ``metas``: the copy in the
+    segment with the highest (seq, name) wins, all others lose.
 
-    return postings.select("term", "seg", "doc_ids", "tfs", "dls").mapInPandas(
-        run, schema=DECODED_SCHEMA
+    Returns (losers as (seg, doc_id, dl) rows, sorted names of the
+    segments that hold a doc with two or more copies)."""
+    rows = _scan_docs(store, metas, "doc_id", doc_ids)
+    if rows.empty:
+        return rows, []
+    rank = {
+        m.name: i
+        for i, m in enumerate(sorted(metas, key=lambda m: (m.seq, m.name)))
+    }
+    ids = rows["doc_id"].to_numpy()
+    order = np.lexsort((rows["seg"].map(rank).to_numpy(), ids))
+    rows, ids = rows.iloc[order].reset_index(drop=True), ids[order]
+    change = ids[1:] != ids[:-1]
+    last = np.append(change, True)      # the top-ranked copy of each id
+    first = np.insert(change, 0, True)
+    dup_segs = sorted(set(rows["seg"][~(first & last)]))
+    return rows[~last].reset_index(drop=True), dup_segs
+
+
+def _duplicate_ids(
+    spark: SparkSession, store: SegmentStore, metas: list[SegmentMeta]
+) -> np.ndarray:
+    """Doc ids held by two or more of ``metas`` — one ids-only Spark job;
+    only the (few) duplicated ids reach the driver."""
+    rows = (
+        store.read_docs(spark, metas).groupBy("doc_id").count()
+        .filter(F.col("count") > 1).select("doc_id").collect()
     )
+    return np.array([r[0] for r in rows], dtype=np.int64)
+
+
+def drop_losers(
+    rb: pa.RecordBatch, losers: dict[str, np.ndarray]
+) -> pa.Table:
+    """Loser filter over stored packed postings rows.
+
+    ``rb``: (term, seg, doc_ids, tfs, dls) rows; ``losers``: segment name
+    → doc ids to drop from that segment's rows. Returns a table of
+    level-1 partial rows (term, doc_ids, tfs, dls): a row without a loser
+    passes through byte-identical; a row holding one is decoded, filtered
+    and re-encoded (delta doc ids, reset per row); a row that loses all
+    its docs disappears."""
+    import pyarrow.compute as pc
+
+    verbatim = np.ones(rb.num_rows, dtype=bool)
+    new_rows = []
+    segs = rb.column("seg")
+    for seg, dead in losers.items():
+        rows = np.flatnonzero(
+            pc.equal(segs, seg).to_numpy(zero_copy_only=False)
+        )
+        if not rows.size:
+            continue
+        idx = pa.array(rows)
+
+        def decode(col):
+            return codec.varint_decode_concat(
+                rb.column(col).take(idx).to_pylist()
+            )
+
+        d_vals, d_row = decode("doc_ids")
+        ids = codec.cumsum_with_resets(
+            d_vals, np.flatnonzero(np.insert(d_row[1:] != d_row[:-1], 0, True))
+        )
+        hit = np.isin(ids, dead)
+        if not hit.any():
+            continue
+        touched = np.zeros(rows.size, dtype=bool)
+        touched[d_row[hit]] = True
+        verbatim[rows[touched]] = False
+        keep = touched[d_row] & ~hit
+        if not keep.any():
+            continue
+        t_vals, l_vals = decode("tfs")[0], decode("dls")[0]
+        ids, row_of = ids[keep], d_row[keep]
+        starts = np.flatnonzero(np.insert(row_of[1:] != row_of[:-1], 0, True))
+        deltas = ids.copy()
+        deltas[1:] -= ids[:-1]
+        deltas[starts] = ids[starts]
+        new_rows.append(pa.RecordBatch.from_arrays(
+            [
+                rb.column("term").take(pa.array(rows[row_of[starts]])),
+                *[
+                    pa.array(codec.varint_encode_grouped(v, starts),
+                             type=rb.schema.field(c).type)
+                    for c, v in (("doc_ids", deltas.astype("uint64")),
+                                 ("tfs", t_vals[keep]),
+                                 ("dls", l_vals[keep]))
+                ],
+            ],
+            names=PARTIAL_COLS,
+        ))
+    return pa.Table.from_batches(
+        [rb.filter(pa.array(verbatim)).select(PARTIAL_COLS), *new_rows]
+    )
+
+
+def _live(seg_col: str, by_seg: dict[str, np.ndarray]):
+    """Filter expression keeping rows whose (segment, doc_id) is not a
+    loser: one ``doc_id IN (...)`` set per loser segment, evaluated in the
+    scan stage — no join, no exchange. Loser sets are a batch's overlaps
+    or a tombstone batch, small enough to live in the plan."""
+    lost = F.lit(False)
+    for seg, ids in by_seg.items():
+        lost = lost | (
+            (F.col(seg_col) == seg) & F.col("doc_id").isin(ids.tolist())
+        )
+    return ~lost
 
 
 def merge_segments(
@@ -142,12 +267,18 @@ def merge_segments(
     config: EngineConfig | None = None,
     segment_names: list[str] | None = None,
     delete_doc_keys: DataFrame | None = None,
+    losers: pd.DataFrame | None = None,
 ) -> BuildMetrics:
     """Merge ``segment_names`` (default: all active) into one new segment.
 
     ``delete_doc_keys``: optional single-column ``doc_key`` frame — those
     documents are dropped during the rewrite (tombstone semantics W3,
-    DataConverter.java:122-139 re-cast as an index-maintenance op).
+    DataConverter.java:122-139 re-cast as an index-maintenance op). The
+    keys are collected to the driver (a tombstone batch, not a corpus).
+
+    ``losers``: the (seg, doc_id, dl) copies to drop, when the caller
+    already knows them (``reconcile_updates``); None finds the inputs'
+    duplicated docs with one ids-only Spark job.
     """
     config = config or EngineConfig()
     t0 = time.monotonic()
@@ -163,183 +294,37 @@ def merge_segments(
     # deletes), silently overwriting a segment directory
     seg_name = f"seg_g{new_gen}_m{int(time.time())}_{uuid.uuid4().hex[:8]}"
 
-    # Disjoint-segment fast path (the common tiered-merge shape: a
-    # hash-partitioned build never re-ingests a doc into two segments).
-    # When no doc_id appears twice and there are no deletes, latest-wins
-    # is the identity — so the decode-explode of every posting entry, the
-    # winners aggregation and the survivor join are pure overhead
-    # (guide §2.3: shuffle the packed bytes, not the exploded rows). The
-    # probe is one ids-only columnar count compared against the manifest
-    # doc counts.
-    if delete_doc_keys is None:
-        total_docs = sum(m.doc_count for m in metas)
-        distinct_docs = (
-            store.read_docs(spark, metas).select("doc_id").distinct().count()
-        )
-        if distinct_docs == total_docs:
-            return _merge_disjoint(
-                spark, store, metas, names, seg_name, new_gen, config, t0
-            )
-
-    docs_parts = []
-    for m in metas:
-        docs_parts.append(
-            store.read_docs(spark, [m], with_seg=True)
-            .withColumnRenamed("seg", "_segname")
-            .withColumn("_gen", F.lit(m.generation))
-        )
-    all_docs = docs_parts[0]
-    for d in docs_parts[1:]:
-        all_docs = all_docs.unionByName(d)
-
-    # latest-wins across generations (ties: lexicographically later segment)
-    winners = (
-        all_docs.groupBy("doc_id")
-        .agg(
-            F.max_by(
-                F.struct("doc_key", "content_sha256", "dl", "_segname"),
-                F.struct("_gen", "_segname"),
-            ).alias("w")
-        )
-        .select(
-            "doc_id",
-            F.col("w.doc_key").alias("doc_key"),
-            F.col("w.content_sha256").alias("content_sha256"),
-            F.col("w.dl").alias("dl"),
-            F.col("w._segname").alias("_segname"),
-        )
-    )
+    if losers is None:
+        dup = _duplicate_ids(spark, store, metas) if len(metas) > 1 else []
+        losers = resolve_losers(store, metas, dup)[0]
+    dropped = losers[losers["seg"].isin(names)]
     if delete_doc_keys is not None:
-        winners = winners.join(
-            F.broadcast(delete_doc_keys.select("doc_key").distinct()),
-            "doc_key",
-            "left_anti",
-        )
-
-    packed = store.read_postings(spark, metas)
-    decoded = decode_postings_df(packed)
-    # keep only posting entries of surviving (doc_id, winning segment) pairs
-    survivors = decoded.join(
-        winners.select("doc_id", "_segname"), ["doc_id", "_segname"], "inner"
-    ).select("term", "doc_id", "tf", "dl")
-
-    from pyspark.sql import Observation
+        keys = [r[0] for r in
+                delete_doc_keys.select("doc_key").distinct().collect()]
+        dropped = pd.concat(
+            [dropped, _scan_docs(store, metas, "doc_key", keys)],
+            ignore_index=True,
+        ).drop_duplicates(["seg", "doc_id"])
+    by_seg = {s: g["doc_id"].to_numpy() for s, g in dropped.groupby("seg")}
 
     seg_path = store.segment_path(seg_name)
-    doc_obs = Observation(f"{seg_name}_docs")
-    winners.select("doc_id", "doc_key", "content_sha256", "dl").observe(
-        doc_obs,
-        F.count(F.lit(1)).alias("n"),
-        F.coalesce(F.sum("dl"), F.lit(0)).alias("s"),
-    ).write.mode("overwrite").parquet(f"{seg_path}/docs.parquet")
-    post = build_segment_postings(survivors, seg_name, config)
-    post_obs = Observation(f"{seg_name}_post")
-    post = post.observe(
-        post_obs,
-        F.count(F.lit(1)).alias("t"),
-        F.coalesce(F.sum("df"), F.lit(0)).alias("p"),
-    )
-    # already term-partitioned + sorted (see indexer._build_one_segment)
-    post.write.mode("overwrite").parquet(f"{seg_path}/postings.parquet")
-
-    if store.meta().get("positions"):
-        # positions live in the same segments merges rewrite (Lucene
-        # contract): decode to per-doc blobs, keep the same survivors
-        # (latest-wins + deletes), re-pack for the merged segment. Blobs
-        # concatenate byte-for-byte — no position value is re-encoded.
-        from kafka_connect_opensearch_spark.operators import positions as pos
-
-        decoded_pos = pos.decode_positions_df(store.read_positions(spark, metas))
-        pos_survivors = decoded_pos.join(
-            winners.select("doc_id", "_segname"), ["doc_id", "_segname"],
-            "inner",
-        ).select("term", "doc_id", "n_pos", "pos_blob")
-        pos.repack_positions(pos_survivors, config).withColumn(
-            "seg", F.lit(seg_name)
-        ).select(
-            "term", "seg", "part", "n_docs",
-            "doc_ids", "pos_counts", "positions",
-        ).withColumn(
-            "rb", F.substring("term", 1, 1)
-        ).write.partitionBy("rb").mode("overwrite").parquet(
-            f"{seg_path}/positions.parquet"
-        )
-
-    # stats ride the write jobs (Observation) — the prior read-back of the
-    # just-written files was two extra jobs per merge
-    drow, prow = doc_obs.get, post_obs.get
-    meta = SegmentMeta(
-        name=seg_name,
-        generation=new_gen,
-        doc_count=int(drow["n"]),
-        sum_dl=int(drow["s"]),
-        n_terms=int(prow["t"]),
-        n_postings=int(prow["p"]),
-    )
-    store.write_segmeta(meta)
-    call_with_retries(
-        f"commit merge {seg_name}",
-        lambda: store.commit_batch(
-            f"merge_{seg_name}",
-            {"batch": f"merge_{seg_name}", "segments": [meta.__dict__],
-             "replaces": names},
-        ),
-        max_retries=config.max_retries,
-        retry_backoff_ms=config.retry_backoff_ms,
-    )
-    out = BuildMetrics(
-        docs_indexed=meta.doc_count,
-        postings_written=meta.n_postings,
-        segments_built=1,
-        segments_merged=len(names),
-    )
-    out.wall_secs = time.monotonic() - t0
-    return out
-
-
-def _merge_disjoint(
-    spark: SparkSession,
-    store: SegmentStore,
-    metas: list[SegmentMeta],
-    names: list[str],
-    seg_name: str,
-    new_gen: int,
-    config: EngineConfig,
-    t0: float,
-) -> BuildMetrics:
-    """Merge segments with pairwise-disjoint doc ids (no deletes): every
-    doc and posting survives verbatim, so the rewrite reduces to
-
-    - docs: verbatim union write (no winners aggregation, no join);
-    - postings: the stored packed rows ARE valid level-1 partials
-      (term, delta-varint doc_ids/tfs/dls) — regroup them by term and run
-      the standard level-2 sorted-run merge. The shuffle carries one
-      packed row per (term, source segment) instead of one exploded row
-      per posting (~20x fewer bytes; the r6 A/B measured auto_merge
-      12.9 s -> see BENCH/ROUND6.md);
-    - positions: per-doc blobs concat byte-for-byte (same as the slow
-      path, minus the survivor join).
-
-    Doc stats come from manifest arithmetic (exact under disjointness);
-    term stats ride the postings write as an Observation.
-    """
-    from pyspark.sql import Observation
-
-    from kafka_connect_opensearch_spark.operators.indexer import (
-        _make_merge_stream,
-    )
-    from kafka_connect_opensearch_spark.operators.segments import (
-        POSTINGS_SCHEMA,
+    docs = store.read_docs(spark, metas, with_seg=True)
+    if by_seg:
+        docs = docs.filter(_live("seg", by_seg))
+    docs.select(*DOCS_COLUMNS).write.mode("overwrite").parquet(
+        f"{seg_path}/docs.parquet"
     )
 
-    seg_path = store.segment_path(seg_name)
-    store.read_docs(spark, metas).select(
-        "doc_id", "doc_key", "content_sha256", "dl"
-    ).write.mode("overwrite").parquet(f"{seg_path}/docs.parquet")
+    partial = store.read_postings(spark, metas)
+    if not by_seg:
+        partial = partial.select(*PARTIAL_COLS)
+    else:
+        def filter_losers(batches):
+            for rb in batches:
+                yield from drop_losers(rb, by_seg).to_batches()
 
-    partial = store.read_postings(spark, metas).select(
-        "term", "doc_ids", "tfs", "dls"
-    )
+        partial = partial.select("term", "seg", "doc_ids", "tfs", "dls") \
+            .mapInArrow(filter_losers, schema=PARTIAL_SCHEMA)
     l2 = partial.repartition(
         max(2, config.shuffle_partitions // 4), "term"
     ).sortWithinPartitions("term")
@@ -354,16 +339,19 @@ def _merge_disjoint(
     ).write.mode("overwrite").parquet(f"{seg_path}/postings.parquet")
 
     if store.meta().get("positions"):
+        # positions live in the same segments merges rewrite (Lucene
+        # contract): per-doc blobs concatenate byte-for-byte — no position
+        # value is re-encoded — and merged rows get fresh skip data
         from kafka_connect_opensearch_spark.operators import positions as pos
 
-        decoded_pos = pos.decode_positions_df(
-            store.read_positions(spark, metas)
-        ).select("term", "doc_id", "n_pos", "pos_blob")
-        pos.repack_positions(decoded_pos, config).withColumn(
-            "seg", F.lit(seg_name)
-        ).select(
-            "term", "seg", "part", "n_docs",
-            "doc_ids", "pos_counts", "positions",
+        decoded = pos.decode_positions_df(store.read_positions(spark, metas))
+        if by_seg:
+            decoded = decoded.filter(_live("_segname", by_seg))
+        pos.repack_positions(
+            decoded.select("term", "doc_id", "n_pos", "pos_blob"), config
+        ).withColumn("seg", F.lit(seg_name)).select(
+            "term", "seg", "part", "n_docs", "doc_ids", "pos_counts",
+            "positions", "blk_max_doc", "blk_lens",
         ).withColumn(
             "rb", F.substring("term", 1, 1)
         ).write.partitionBy("rb").mode("overwrite").parquet(
@@ -374,10 +362,13 @@ def _merge_disjoint(
     meta = SegmentMeta(
         name=seg_name,
         generation=new_gen,
-        doc_count=sum(m.doc_count for m in metas),
-        sum_dl=sum(m.sum_dl for m in metas),
+        doc_count=sum(m.doc_count for m in metas) - len(dropped),
+        sum_dl=sum(m.sum_dl for m in metas) - int(dropped["dl"].sum()),
         n_terms=int(prow["t"]),
         n_postings=int(prow["p"]),
+        # the newest content it holds, not when the merge ran: a merge
+        # committed after a newer ingest must not outrank that ingest
+        seq=max(m.seq for m in metas),
     )
     store.write_segmeta(meta)
     call_with_retries(
@@ -413,39 +404,29 @@ def reconcile_updates(
     into a NEW segment coexists with its older copy — doc_count
     over-reports, searches return both rows, stale phrases still match.
     The engine's equivalent is a targeted merge of exactly the segments
-    that share a doc_id: ``merge_segments`` already implements the
-    (generation, segment-name) winner rule, so reconciliation reuses the
-    fully-tested rewrite instead of a second shadowing mechanism.
+    that share a doc_id, with the older copies passed to
+    ``merge_segments`` as its losers.
 
-    ``new_segment_names`` narrows the overlap probe to docs of the
-    just-committed segments (the streaming per-batch shape — O(batch)
-    semi-join against the older doc ids, ids-only columnar scan); None
-    probes all active segments pairwise (one groupBy over doc ids).
-    Returns the merge metrics, or None when there was nothing to do.
-    No-overlap ingests pay only the probe; write amplification is bounded
-    by the tiered auto-merge policy that would have merged these segments
-    eventually anyway."""
+    The overlap probe: ``new_segment_names`` (the streaming per-batch
+    shape) reads the new segments' doc ids, then scans the ``doc_id``/
+    ``dl`` columns of every live segment's docs files driver-side with
+    pyarrow, filtered by ``isin(new ids)`` while streaming — O(batch)
+    memory and no Spark job. None probes all active segments pairwise
+    (one ids-only Spark job for the duplicated ids, then the same
+    driver-side ranking). Copies rank by (seq, segment name): the newest
+    commit wins. Returns the merge metrics, or None when there was
+    nothing to do."""
     store = SegmentStore(index_dir)
     metas = store.active_segments()
     if len(metas) < 2:
         return None
-    tagged = store.read_docs(spark, metas, with_seg=True).select(
-        "doc_id", "seg"
-    )
     if new_segment_names:
-        new_ids = tagged.filter(
-            F.col("seg").isin(list(new_segment_names))
-        ).select("doc_id")
-        tagged = tagged.join(new_ids.distinct(), "doc_id", "left_semi")
-    dup_segs = (
-        tagged.groupBy("doc_id")
-        .agg(F.collect_set("seg").alias("segs"), F.count("*").alias("n"))
-        .filter(F.col("n") > 1)
-        .select(F.explode("segs").alias("seg"))
-        .distinct()
-        .collect()
-    )
-    names = sorted({r["seg"] for r in dup_segs})
+        new = [m for m in metas if m.name in set(new_segment_names)]
+        ids = _scan_docs(store, new)["doc_id"].to_numpy()
+    else:
+        ids = _duplicate_ids(spark, store, metas)
+    losers, names = resolve_losers(store, metas, ids)
     if not names:
         return None
-    return merge_segments(spark, index_dir, config, segment_names=names)
+    return merge_segments(spark, index_dir, config, segment_names=names,
+                          losers=losers)

@@ -7,7 +7,7 @@ Lucene keeps positions inside the same segments merges rewrite
 ``positions.parquet`` beside its ``postings.parquet`` — built by the same
 build pipelines (classic per-segment and bulk/wave), committed by the
 same manifests, and rewritten by the same log-structured merges
-(latest-wins across generations + tombstone deletes) — so positional
+(newest-commit-wins + tombstone deletes) — so positional
 queries can never go stale against the frequency index. Enabled per
 index via ``EngineConfig.index_positions`` (the per-field positions
 flag of a Lucene mapping, re-cast per index).
@@ -1788,15 +1788,22 @@ class PositionsReader:
         "rare" term has millions of postings at full scale.
 
         During the pre-reconcile window a re-ingested doc can coexist in
-        two segments; duplicates resolve to the MAX-generation segment's
-        dl (the same latest-wins rule merge applies), so phrase scoring
-        never reads the stale copy's dl."""
+        two segments; duplicates resolve to the copy from the newest
+        commit, ranked by segment (seq, name) — the same latest-wins rule
+        merge applies — so phrase scoring never reads the stale copy's
+        dl."""
         import pyarrow.dataset as pads
 
-        gen_of = {s.name: s.generation for s in reader._segments}  # noqa: SLF001
+        rank_of = {
+            s.name: i
+            for i, s in enumerate(sorted(
+                reader._segments,  # noqa: SLF001
+                key=lambda s: (s.seq, s.name),
+            ))
+        }
         id_parts: list[np.ndarray] = []
         dl_parts: list[np.ndarray] = []
-        gen_parts: list[np.ndarray] = []
+        rank_parts: list[np.ndarray] = []
         for dset, names in reader._postings_datasets():  # noqa: SLF001
             flt = pads.field("term") == term
             if names is not None:
@@ -1815,17 +1822,17 @@ class PositionsReader:
                 dl_parts.append(codec.varint_decode(
                     tbl["dls"][row].as_py()
                 ).astype(np.int64))
-                gen_parts.append(np.full(
-                    ids_row.size, gen_of.get(segs[row], 0), dtype=np.int64
+                rank_parts.append(np.full(
+                    ids_row.size, rank_of.get(segs[row], 0), dtype=np.int64
                 ))
         if not id_parts:
             return (np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int64))
         ids = np.concatenate(id_parts)
         dls = np.concatenate(dl_parts)
-        gens = np.concatenate(gen_parts)
-        # sort by (doc_id, generation); the LAST row of each equal-id run
-        # is the max-generation copy — keep exactly that one
-        order = np.lexsort((gens, ids))
+        ranks = np.concatenate(rank_parts)
+        # sort by (doc_id, rank); the LAST row of each equal-id run is the
+        # newest copy — keep exactly that one
+        order = np.lexsort((ranks, ids))
         ids, dls = ids[order], dls[order]
         keep = np.empty(ids.size, dtype=bool)
         keep[-1] = True

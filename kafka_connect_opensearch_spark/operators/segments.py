@@ -17,7 +17,17 @@ Layout::
         docs.parquet/               # doc_id, doc_key, content_sha256, dl, ...
         postings.parquet/           # term, df, max_tf, doc_ids, tfs, dls, block_max
         segmeta.json                # doc_count, sum_dl, n_terms, n_postings, generation
-      manifest/<batch_id>.json      # commit point (written last, atomic rename)
+      manifest/<batch_id>.json      # commit point (written last, atomic
+                                    # rename): batch, seq, segments, replaces
+
+``seq`` orders commits: each manifest entry gets the next integer of a
+monotonically increasing sequence, and every segment it commits inherits
+it — except a merged segment, which inherits the max over its inputs (the
+newest content it holds, not the time the merge ran). Latest-wins between
+two copies of a document ranks their segments by ``(seq, name)``: the
+copy from the newest commit wins, whatever the segment's merge
+``generation``. Entries written before ``seq`` existed rank in manifest
+(file-name) order, below every entry that carries one.
 """
 
 from __future__ import annotations
@@ -47,6 +57,8 @@ class SegmentMeta:
     # otherwise the root of a Hive-partitioned bulk build whose
     # {docs,postings}.parquet dirs contain seg=<name> partitions.
     path: str = ""
+    # commit sequence (see module docstring); -1 until committed
+    seq: int = -1
 
 
 @dataclass
@@ -97,10 +109,44 @@ class SegmentStore:
     def commit_batch(self, batch_id: str, entry: dict) -> None:
         """Atomic commit: temp-write + rename — the segment becomes visible
         only after its data files are fully written (mirrors the reference's
-        offset-after-success ordering, OpenSearchClient.java:370-375)."""
+        offset-after-success ordering, OpenSearchClient.java:370-375).
+
+        An entry without ``seq`` gets the next commit sequence number, and
+        so does each of its segments that has none yet (a merge sets its
+        output's ``seq`` itself; a snapshot copies each entry's ``seq``)."""
+        if "seq" not in entry:
+            seq = self._next_seq()
+            entry = {
+                **entry,
+                "seq": seq,
+                "segments": [
+                    {**s, "seq": seq} if s.get("seq", -1) < 0 else s
+                    for s in entry.get("segments", [])
+                ],
+            }
         self._atomic_write_json(
             os.path.join(self.manifest_dir, f"{batch_id}.json"), entry
         )
+
+    def _sequenced(
+        self, batches: dict[str, dict] | None = None
+    ) -> list[tuple[int, dict]]:
+        """Committed entries (default: all) with their effective ``seq``:
+        entries written before ``seq`` existed take their rank in manifest
+        order."""
+        out = []
+        legacy = 0
+        batches = self.committed_batches() if batches is None else batches
+        for entry in batches.values():
+            if "seq" in entry:
+                out.append((entry["seq"], entry))
+            else:
+                out.append((legacy, entry))
+                legacy += 1
+        return out
+
+    def _next_seq(self) -> int:
+        return 1 + max((seq for seq, _ in self._sequenced()), default=-1)
 
     def _atomic_write_json(self, path: str, obj: dict) -> None:
         tmp = f"{path}.tmp.{os.getpid()}.{time.monotonic_ns()}"
@@ -111,8 +157,11 @@ class SegmentStore:
         os.rename(tmp, path)
 
     # -- segments
-    def active_segments(self) -> list[SegmentMeta]:
-        """Segments referenced by committed manifests, minus merged-away ones.
+    def active_segments(
+        self, batches: dict[str, dict] | None = None
+    ) -> list[SegmentMeta]:
+        """Segments referenced by committed manifests (default: all; a
+        snapshot passes the set it pinned), minus merged-away ones.
 
         A relative bulk ``path`` resolves against THIS store's index dir:
         snapshots write their pinned manifests with snapshot-relative
@@ -121,17 +170,26 @@ class SegmentStore:
         source being moved or deleted."""
         live: dict[str, SegmentMeta] = {}
         dead: set[str] = set()
-        for entry in self.committed_batches().values():
+        for seq, entry in self._sequenced(batches):
             for seg in entry.get("segments", []):
                 m = SegmentMeta(**seg)
                 if m.path and not os.path.isabs(m.path):
                     m.path = os.path.join(self.index_dir, m.path)
+                if m.seq < 0:
+                    m.seq = seq
                 live[seg["name"]] = m
             dead.update(entry.get("replaces", []))
         return [m for n, m in sorted(live.items()) if n not in dead]
 
     def segment_path(self, name: str) -> str:
         return os.path.join(self.segments_dir, name)
+
+    def segment_files(self, m: SegmentMeta, kind: str) -> str:
+        """Directory of segment ``m``'s ``kind`` (docs/postings/positions)
+        parquet files, in either layout — for driver-side pyarrow reads."""
+        if m.path:
+            return os.path.join(m.path, f"{kind}.parquet", f"seg={m.name}")
+        return os.path.join(self.segment_path(m.name), f"{kind}.parquet")
 
     def bulk_path(self, tag: str) -> str:
         return os.path.join(self.index_dir, f"bulk_{tag}")
@@ -217,19 +275,24 @@ class SegmentStore:
 
         metas = self.active_segments() if metas is None else metas
         dfs = []
+        roots: dict[str, list[str]] = {}
         for m in metas:
             if m.path:
-                d = spark.read.parquet(f"{m.path}/docs.parquet").filter(
-                    F.col("seg") == m.name
-                )
-                d = d if with_seg else d.drop("seg")
+                roots.setdefault(m.path, []).append(m.name)
             else:
                 d = spark.read.parquet(
                     f"{self.segment_path(m.name)}/docs.parquet"
                 )
                 if with_seg:
                     d = d.withColumn("seg", F.lit(m.name))
-            dfs.append(d)
+                dfs.append(d)
+        # one read per bulk root (as read_postings): a read per segment
+        # repeats the root's partition discovery for each of them
+        for root, names in roots.items():
+            d = spark.read.parquet(f"{root}/docs.parquet").filter(
+                F.col("seg").isin(names)
+            )
+            dfs.append(d if with_seg else d.drop("seg"))
         out = dfs[0]
         for d in dfs[1:]:
             out = out.unionByName(d)

@@ -84,7 +84,7 @@ def snapshot_index(index_dir: str, snapshot_dir: str) -> dict:
     the snapshot — its manifest is not in the pinned set and its segment
     files are never walked."""
     from kafka_connect_opensearch_spark.operators.segments import (
-        SegmentMeta, SegmentStore)
+        SegmentStore)
 
     if os.path.exists(snapshot_dir):
         raise FileExistsError(f"snapshot target exists: {snapshot_dir}")
@@ -93,18 +93,9 @@ def snapshot_index(index_dir: str, snapshot_dir: str) -> dict:
 
     store = SegmentStore(index_dir)
     batches = store.committed_batches()          # <-- the pin
-    live: dict[str, SegmentMeta] = {}
-    dead: set[str] = set()
-    for entry in batches.values():
-        for seg in entry.get("segments", []):
-            m = SegmentMeta(**seg)
-            if m.path and not os.path.isabs(m.path):
-                # snapshotting a snapshot/restored index: resolve its
-                # relative bulk paths against its own dir first
-                m.path = os.path.join(index_dir, m.path)
-            live[seg["name"]] = m
-        dead.update(entry.get("replaces", []))
-    active = [m for n, m in sorted(live.items()) if n not in dead]
+    # relative bulk paths (snapshotting a snapshot/restored index) resolve
+    # against index_dir first
+    active = store.active_segments(batches)
 
     os.makedirs(snapshot_dir)
     shutil.copy2(os.path.join(index_dir, "meta.json"),
@@ -137,8 +128,12 @@ def snapshot_index(index_dir: str, snapshot_dir: str) -> dict:
     snap_store = SegmentStore(snapshot_dir)
     os.makedirs(snap_store.manifest_dir, exist_ok=True)
     os.makedirs(snap_store.segments_dir, exist_ok=True)
-    for batch_id, entry in batches.items():
-        pinned = dict(entry)
+    # each entry keeps its effective commit seq, so entries written
+    # before seq existed keep their rank in the copy
+    for batch_id, (seq, entry) in zip(
+        batches, store._sequenced(batches), strict=True  # noqa: SLF001
+    ):
+        pinned = dict(entry, seq=seq)
         segs_out = []
         for seg in entry.get("segments", []):
             seg = dict(seg)

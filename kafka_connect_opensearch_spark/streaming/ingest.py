@@ -16,6 +16,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
+from pyspark.storagelevel import StorageLevel
 
 from kafka_connect_opensearch_spark.config import EngineConfig
 from kafka_connect_opensearch_spark.operators.indexer import (
@@ -102,22 +103,31 @@ def start_streaming_index_build(
         bid = f"stream{batch_id:06d}"
         if bid in store.committed_batches():
             return
-        if batch_df.isEmpty():
-            return
-        if backpressure is not None:
-            backpressure.before_batch(spark)
-        docs = prepare_identity(batch_df, id_cols, content_col)
-        seg_name = f"seg_s_{bid}"
-        meta = _build_one_segment(
-            spark, docs, store, seg_name, config, content_col=content_col
-        )
-        store.commit_batch(
-            bid, {"batch": bid, "segments": [meta.__dict__], "replaces": []}
-        )
+        # the emptiness check and the segment's docs/postings/positions
+        # writes would each re-read the batch's source files; the cache
+        # reads them once
+        batch_df = batch_df.persist(StorageLevel.MEMORY_AND_DISK)
+        try:
+            if batch_df.isEmpty():
+                return
+            if backpressure is not None:
+                backpressure.before_batch(spark)
+            docs = prepare_identity(batch_df, id_cols, content_col)
+            seg_name = f"seg_s_{bid}"
+            meta = _build_one_segment(
+                spark, docs, store, seg_name, config, content_col=content_col
+            )
+            store.commit_batch(
+                bid,
+                {"batch": bid, "segments": [meta.__dict__], "replaces": []},
+            )
+        finally:
+            batch_df.unpersist()
         # a micro-batch can re-ingest docs already committed by an earlier
         # batch; reconcile makes latest-wins visible NOW (Lucene's
         # update-marks-deleted contract) instead of at the next tiered
-        # merge — the probe is O(batch) and a no-op without overlap
+        # merge — the probe is a driver-side O(batch) scan (no Spark job)
+        # and a no-op without overlap
         from kafka_connect_opensearch_spark.operators.merge import (
             reconcile_updates,
         )

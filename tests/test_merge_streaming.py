@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -385,3 +386,309 @@ def test_streaming_update_latest_wins_without_manual_merge(spark, tmp_path):
     # the superseded content must be gone
     assert reader.match_count("alpha", "or") + \
         reader.match_count("beta", "or") == 0
+
+
+def _adjacent(texts: dict[int, str], phrase: str) -> list[int]:
+    """Token-adjacency reference for phrase matches."""
+    from kafka_connect_opensearch_spark.functions.analysis import tokenize_py
+
+    return sorted(
+        i for i, t in texts.items()
+        if f" {phrase} " in f" {' '.join(tokenize_py(t))} "
+    )
+
+
+def test_merged_positions_keep_skip_data(spark, tmp_path):
+    """Merged positions rows keep the phrase skip columns, so a merged
+    segment unions with never-merged ones and merges again: 4 segments,
+    merge 2, then merge the 3 live ones; distributed phrase results
+    equal the token-adjacency reference throughout."""
+    from kafka_connect_opensearch_spark.operators.positions import (
+        PositionsReader,
+    )
+
+    n = 300
+    d = str(tmp_path / "idx")
+    cfg = EngineConfig(num_segments=4, salt_partitions=1,
+                       shuffle_partitions=4, index_positions=True)
+    build_index(spark, generate_corpus(spark, n), d, cfg)
+    pdf = _oracle_pdf(n)
+    texts = dict(zip(pdf["doc_id"], pdf["content"], strict=True))
+    store = SegmentStore(d)
+    names = [m.name for m in store.active_segments()]
+    assert len(names) == 4
+    merge_segments(spark, d, cfg, segment_names=names[:2])
+    assert len(store.active_segments()) == 3
+    # a merged + never-merged union reads (NUM_COLUMNS_MISMATCH before)
+    assert store.read_positions(spark).count() > 0
+    pr = PositionsReader(spark, d)
+    phrases = ["return import", "import ident_1"]
+    for ph in phrases:
+        want = _adjacent(texts, ph)
+        assert pr.phrase_match_ids(ph) == want
+        got = pr.phrase_docs(ph, local_threshold=0)
+        assert sorted(r["doc_id"] for r in got.collect()) == want
+    merge_segments(spark, d, cfg)
+    (merged,) = store.active_segments()
+    rows = store.read_positions(spark).filter(F.col("n_docs") > 128)
+    assert rows.count() > 0
+    assert rows.filter(F.length("blk_max_doc") == 0).count() == 0
+    pr.refresh()
+    for ph in phrases:
+        want = _adjacent(texts, ph)
+        assert pr.phrase_match_ids(ph) == want and len(want) > 0
+        got = pr.phrase_docs(ph, local_threshold=0)
+        assert sorted(r["doc_id"] for r in got.collect()) == want
+    top = pr.phrase_topk("return import", k=5, local_threshold=0).collect()
+    assert len(top) == 5
+
+
+def _commit_reingest(spark, store, rows, cfg, name):
+    """Commit ``rows`` (doc_id, text) as one new generation-0 segment."""
+    from kafka_connect_opensearch_spark.operators.indexer import (
+        _build_one_segment,
+        prepare_documents,
+    )
+
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    seg = _build_one_segment(
+        spark, prepare_documents(df, content_col="text", doc_id_col="doc_id"),
+        store, name, cfg, content_col="text",
+    )
+    store.commit_batch(
+        name, {"batch": name, "segments": [seg.__dict__], "replaces": []}
+    )
+    return name
+
+
+def test_newest_commit_wins_over_higher_generation(spark, tmp_path):
+    """A doc whose copy was merged into a generation-1 segment and then
+    re-ingested into a generation-0 segment: the newer commit wins."""
+    from kafka_connect_opensearch_spark.operators.merge import (
+        reconcile_updates,
+    )
+    from kafka_connect_opensearch_spark.operators.positions import (
+        PositionsReader,
+    )
+
+    d = str(tmp_path / "idx")
+    cfg = EngineConfig(num_segments=2, salt_partitions=2,
+                       shuffle_partitions=2, index_positions=True)
+    v1 = spark.createDataFrame(
+        [(1, "alpha beta gamma"), (2, "delta epsilon"), (3, "zeta eta"),
+         (4, "theta iota")],
+        "doc_id long, text string",
+    )
+    build_index(spark, v1, d, cfg, content_col="text", doc_id_col="doc_id")
+    merge_segments(spark, d, cfg)
+    store = SegmentStore(d)
+    (merged,) = store.active_segments()
+    assert merged.generation == 1
+    new = _commit_reingest(spark, store, [(1, "alpha omega omega")], cfg,
+                           "seg_g0_reingest")
+    seg_of = {m.name: m for m in store.active_segments()}
+    assert seg_of[new].generation == 0 and seg_of[new].seq > merged.seq
+
+    m = reconcile_updates(spark, d, cfg, new_segment_names=[new])
+    assert m is not None and m.segments_merged == 2
+    reader = IndexReader(spark, d)
+    assert reader.doc_count() == 4
+    assert reader.match_count("omega") == 1
+    assert reader.match_count("beta") == 0
+    assert [i for i, _ in reader.search_topk("gamma")] == []
+    pr = PositionsReader(spark, d)
+    assert pr.phrase_match_ids("alpha omega") == [1]
+    assert pr.phrase_match_ids("alpha beta") == []
+
+
+def test_streaming_newest_commit_wins_after_merge(spark, tmp_path):
+    """Streaming variant: the first version is merged (generation 1)
+    before the stream delivers the update in a generation-0 segment."""
+    from kafka_connect_opensearch_spark.streaming.ingest import (
+        start_streaming_index_build,
+    )
+
+    schema = "repo string, path string, commit string, content string"
+    src_dir, idx = str(tmp_path / "src"), str(tmp_path / "sidx")
+    ckpt = str(tmp_path / "ckpt")
+    cfg = EngineConfig(num_segments=1, salt_partitions=2,
+                       shuffle_partitions=2)
+
+    def stream():
+        q = start_streaming_index_build(
+            spark, src_dir, schema, idx, ckpt, cfg,
+            max_files_per_trigger=1,
+        )
+        q.awaitTermination(120)
+        assert q.exception() is None
+
+    spark.createDataFrame(
+        [("r", "a.py", "c1", "alpha beta"), ("r", "b.py", "c1", "gamma")],
+        schema,
+    ).coalesce(1).write.parquet(src_dir, mode="append")
+    spark.createDataFrame([("r", "c.py", "c1", "delta")], schema) \
+        .coalesce(1).write.parquet(src_dir, mode="append")
+    stream()
+    merge_segments(spark, idx, cfg)
+    (merged,) = SegmentStore(idx).active_segments()
+    assert merged.generation == 1
+    spark.createDataFrame([("r", "a.py", "c1", "omega kappa")], schema) \
+        .coalesce(1).write.parquet(src_dir, mode="append")
+    stream()
+    reader = IndexReader(spark, idx)
+    assert reader.doc_count() == 3
+    assert reader.match_count("omega", "or") == 1
+    assert reader.match_count("alpha", "or") + \
+        reader.match_count("beta", "or") == 0
+
+
+def test_streaming_reads_each_batch_once(spark, tmp_path):
+    """The micro-batch is cached for the build: a stream over one
+    400-row file reports 400 input rows, not one read per write."""
+    from kafka_connect_opensearch_spark.sources.corpus import CORPUS_SCHEMA
+    from kafka_connect_opensearch_spark.streaming.ingest import (
+        start_streaming_index_build,
+    )
+
+    src_dir = str(tmp_path / "src")
+    generate_corpus(spark, 400).coalesce(1).write.parquet(src_dir)
+    q = start_streaming_index_build(
+        spark, src_dir, CORPUS_SCHEMA, str(tmp_path / "idx"),
+        str(tmp_path / "ckpt"), CFG, max_files_per_trigger=1,
+    )
+    q.awaitTermination(120)
+    assert sum(p["numInputRows"] for p in q.recentProgress) == 400
+    assert IndexReader(spark, str(tmp_path / "idx")).doc_count() == 400
+
+
+def test_reconcile_probe_starts_no_spark_job(spark, tmp_path, monkeypatch):
+    """reconcile_updates finds overlaps driver-side: with no overlap it
+    returns without a Spark job; with one, it hands merge_segments the
+    older copy as its loser, again without a job of its own."""
+    from kafka_connect_opensearch_spark.operators import merge
+
+    d = str(tmp_path / "idx")
+    cfg = EngineConfig(num_segments=2, salt_partitions=2,
+                       shuffle_partitions=2)
+    v1 = spark.createDataFrame(
+        [(1, "alpha beta"), (2, "gamma"), (3, "delta")],
+        "doc_id long, text string",
+    )
+    build_index(spark, v1, d, cfg, content_col="text", doc_id_col="doc_id")
+    store = SegmentStore(d)
+    old_seg = next(
+        m.name for m in store.active_segments()
+        if 1 in {r["doc_id"] for r in store.read_docs(spark, [m]).collect()}
+    )
+    fresh = _commit_reingest(spark, store, [(9, "omega")], cfg, "fresh")
+    upd = _commit_reingest(spark, store, [(1, "alpha omega")], cfg, "upd")
+
+    sc = spark.sparkContext
+    calls = []
+    monkeypatch.setattr(merge, "merge_segments",
+                        lambda *a, **kw: calls.append(kw))
+    sc.setJobGroup("reconcile_probe", "driver-side overlap probe")
+    try:
+        assert merge.reconcile_updates(spark, d, cfg, [fresh]) is None
+        merge.reconcile_updates(spark, d, cfg, [upd])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("reconcile_probe") == []
+    (kw,) = calls
+    assert kw["segment_names"] == sorted([old_seg, upd])
+    losers = kw["losers"]
+    assert losers[["seg", "doc_id"]].values.tolist() == [[old_seg, 1]]
+    assert losers["dl"].tolist() == [2]
+
+
+@pytest.mark.parametrize("seed", [5, 23])
+def test_randomized_latest_wins_parity(spark, tmp_path, seed):
+    """Seeded sequences of ingest, re-ingest, tombstone delete, merge,
+    auto_merge and reconcile with positions on. Whenever no re-ingest is
+    waiting for a reconcile, top-k (ids, bit-equal scores), doc_count and
+    phrase matches equal the references over the live model."""
+    from kafka_connect_opensearch_spark.operators.merge import (
+        auto_merge,
+        reconcile_updates,
+    )
+    from kafka_connect_opensearch_spark.operators.positions import (
+        PositionsReader,
+    )
+
+    rng = np.random.default_rng(seed)
+    vocab = ["alpha", "beta", "gamma", "delta", "omega", "kappa"]
+
+    def text():
+        return " ".join(rng.choice(vocab, size=int(rng.integers(2, 8))))
+
+    d = str(tmp_path / "idx")
+    cfg = EngineConfig(num_segments=2, salt_partitions=2,
+                       shuffle_partitions=2, merge_factor=2,
+                       index_positions=True)
+    live = {i: text() for i in range(1, 11)}
+    build_index(
+        spark, spark.createDataFrame(list(live.items()),
+                                     "doc_id long, text string"),
+        d, cfg, content_col="text", doc_id_col="doc_id",
+    )
+    store = SegmentStore(d)
+    reader, pr = IndexReader(spark, d), PositionsReader(spark, d)
+
+    def check(step):
+        reader.refresh()
+        pr.refresh()
+        assert reader.doc_count() == len(live), step
+        pdf = pd.DataFrame({"doc_id": list(live), "text": list(live.values())})
+        for q in ("alpha", "beta gamma", "omega kappa delta"):
+            got = reader.search_topk(q, k=5)
+            want = brute_force_bm25(pdf, q, k=5, text_col="text")
+            assert [i for i, _ in got] == want["doc_id"].tolist(), (step, q)
+            np.testing.assert_array_equal(
+                np.array([s for _, s in got]), want["score"].to_numpy()
+            )
+        for ph in ("alpha beta", "gamma gamma", "kappa omega"):
+            assert pr.phrase_match_ids(ph) == _adjacent(live, ph), (step, ph)
+
+    ops = list(rng.permutation(["ingest", "reingest", "reingest_raw",
+                                "delete", "merge", "auto_merge",
+                                "reconcile"]))
+    pending = False   # a re-ingest committed without its reconcile
+    next_id = 100
+    for step, op in enumerate(ops):
+        name = f"s{step}_{op}"
+        if op == "ingest":
+            rows = [(next_id + j, text()) for j in range(2)]
+            next_id += 2
+            _commit_reingest(spark, store, rows, cfg, name)
+            reconcile_updates(spark, d, cfg, new_segment_names=[name])
+            live.update(rows)
+        elif op in ("reingest", "reingest_raw"):
+            ids = rng.choice(sorted(live), size=2, replace=False)
+            rows = [(int(i), text()) for i in ids]
+            _commit_reingest(spark, store, rows, cfg, name)
+            if op == "reingest":
+                reconcile_updates(spark, d, cfg, new_segment_names=[name])
+            else:
+                pending = True
+            live.update(rows)
+        elif op == "delete":
+            victim = int(rng.choice(sorted(live)))
+            tomb = spark.createDataFrame([(str(victim),)], "doc_key string")
+            merge_segments(spark, d, cfg, delete_doc_keys=tomb)
+            del live[victim]
+            pending = False   # merged every live segment
+        elif op == "merge":
+            names = [m.name for m in store.active_segments()]
+            if len(names) >= 2:
+                pick = rng.choice(names, size=2, replace=False)
+                merge_segments(spark, d, cfg,
+                               segment_names=sorted(str(n) for n in pick))
+        elif op == "auto_merge":
+            auto_merge(spark, d, cfg)
+        else:
+            reconcile_updates(spark, d, cfg)
+            pending = False
+        if not pending:
+            check(f"{step}:{op}")
+    reconcile_updates(spark, d, cfg)
+    check("final")
