@@ -328,8 +328,12 @@ def q_term_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     reader = _get_index(spark, sf_dir)
     docs = _read(spark, sf_dir, "documents")
+    # positions as a joined string: a list column cannot be sorted or
+    # compared by value in a flat result dump
     return term_vectors(reader, docs, TV_DOC_ID, text_col="text",
-                        id_col="doc_id")
+                        id_col="doc_id").withColumn(
+        "positions", F.array_join("positions", ",")
+    )
 
 
 PERC_QUERIES = [
@@ -2362,7 +2366,7 @@ WITH toks AS (
 ),
 tv AS (
   SELECT term, count(*)::BIGINT AS tf,
-         list_sort(list(pos))::INT[] AS positions
+         array_to_string(list_sort(list(pos)), ',') AS positions
   FROM toks GROUP BY term
 ),
 alltoks AS (

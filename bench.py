@@ -100,8 +100,8 @@ def main() -> None:
             shuffle_partitions=max(cpus, 16),
             salt_partitions=16,
         )
-        # bulk mode: the 100 TB initial-load path — one scan, one doc
-        # shuffle, one packed-partials shuffle for ALL segments
+        # bulk mode: the initial-load path — one scan, one doc shuffle,
+        # one writer task per segment for ALL segments
         t0 = time.monotonic()
         metrics = build_index_bulk(spark, corpus, idx_dir, cfg)
         timings["index_build"] = round(time.monotonic() - t0, 3)

@@ -107,13 +107,6 @@ class EngineConfig:
     data_stream_timestamp_field: tuple[str, ...] = ()
     # --- index build ---
     num_segments: int = 8            # micro-batches per build (segment count)
-    # concurrent segment-build jobs from driver threads. The reference's
-    # max.in.flight.requests analog for builds, but defaulting to 1:
-    # a Spark job already spans the whole cluster, and concurrent
-    # Python-UDF stages thrash the per-executor python-worker pool
-    # (measured 2.7× slower at inflight=5 vs 1 on local[32]). Raise only
-    # when single jobs can't saturate the cluster (many tiny segments).
-    build_concurrency: int = 1
     # micro-batches grouped per ingest pipeline (group commit; the
     # reference's BulkProcessor batches bulks the same way). Each batch
     # still commits its own manifest — crash re-work is bounded by one wave.
@@ -129,14 +122,6 @@ class EngineConfig:
     # (phrase/NEAR/phrase-BM25 queries); build cost ≈ one extra tokenized
     # pass + a corpus-sized store, so it is a per-index mapping choice.
     index_positions: bool = False
-    # Cache the analyzed (tokenized) frame across the build pipeline's
-    # write actions (docs/postings/positions each re-execute the
-    # scan+identity+tokenize lineage otherwise). None = auto: on when
-    # positions triple the consumer count, off for the two-consumer
-    # path (measured break-even there — the token-array cache write
-    # costs what one recompute saves). Disk-backed, unpersisted at the
-    # end of the pipeline.
-    cache_analyzed: bool | None = None
     # --- BM25 ---
     k1: float = BM25_K1
     b: float = BM25_B
@@ -197,8 +182,6 @@ class EngineConfig:
             raise ConfigException("num_segments must be >= 1")
         if self.salt_partitions < 1:
             raise ConfigException("salt_partitions must be >= 1")
-        if self.build_concurrency < 1:
-            raise ConfigException("build_concurrency must be >= 1")
         if self.ingest_wave_size < 1:
             raise ConfigException("ingest_wave_size must be >= 1")
         if self.merge_factor < 2:

@@ -1,34 +1,42 @@
 """Inverted-index build: salted, resumable, explode-free (SURVEY.md D2-D4).
 
-Two build modes share one pipeline shape:
+Two build modes share one writer:
 
 - :func:`build_index` — micro-batched (one batch → one immutable segment,
   mirroring the connector's bulk-flush unit, OpenSearchClient.java:145-155);
-  resumable per batch via the manifest.
-- :func:`build_index_bulk` — ALL segments in one pipeline (initial-load
-  path): one scan, one doc shuffle, one packed-partials shuffle, Hive
-  ``seg=<name>``-partitioned writes, single atomic commit.
+  resumable per batch via the manifest; pending batches build in waves.
+- :func:`build_index_bulk` — ALL segments in one job (initial-load path),
+  single atomic commit.
 
-Pipeline:
+Writer job (:func:`_build_segments_pipeline`), the shape of Lucene's
+per-thread segment writer:
 
   source
     → identity (doc_key/doc_id/sha256 — cheap JVM exprs)
-    → repartition by hash(doc_id)       — spreads work AND is the stopword
-      salt: a hot term's postings split across all partitions, so no
-      level-1 worker sees more than a partition's worth (AQE can't split
-      aggregation groups; the spread is explicit, SURVEY.md §4.2)
+    → segment = pmod(xxhash64(doc_id), n), n planned from the input size
+    → repartitionById(segment): each segment's docs in one partition
     → tokenize (regexp_extract_all, whole-stage codegen)
-    → level-1 pack (mapInArrow): pyarrow dictionary_encode counts terms —
-      NO explode, no Python string objects; emits delta+varint packed
-      partial posting lists, one row per (term, partition)
-    → shuffle packed partials by term (~20× fewer bytes than raw rows)
-    → level-2 merge (sorted-run mapInPandas): concat-decode, reset-cumsum,
-      re-encode + per-block max_tf; output stays term-sorted per file so
-      parquet row-group min/max stats prune query-time term lookups
+    → one writer task per segment (mapInArrow, :func:`_segment_writer`):
+      level-1 pack per Arrow batch (dictionary_encode counts terms — NO
+      explode, no Python string objects), positions pack per
+      ``part = pmod(doc_id, salt_partitions)``, then the level-2 kernel
+      (:func:`_merge_partials`: concat-decode, reset-cumsum, re-encode +
+      per-block max_tf); docs, postings and positions files written with
+      pyarrow into ``seg=<name>`` (and ``rb=``) directories, term-sorted
+      so parquet min/max stats prune query-time term lookups
+    → one stats row per segment back to the driver → manifest commit
 
-Scale notes (100 TB / 10^12 docs): per-term level-2 group size is bounded
-by the segment's doc count (the same bound Lucene accepts per segment);
-nothing is ever collected to the driver except per-segment counters.
+Streaming micro-batches keep the two-level Spark pipeline
+(:func:`build_segment_postings_from_docs`): level-1 pack, a shuffle of the
+packed partials by term, and the same level-2 kernel in mapInPandas.
+
+Scale notes: a writer task holds one segment's docs rows, packed
+postings and positions, one Arrow batch of token lists, and the level-2
+kernel's decoded arrays — about 24 bytes per byte of its input files
+plus ~41 MB (measured, see ``WRITER_BYTES_PER_INPUT_BYTE``). The segment count grows
+with the input so that this stays under
+``spark.sql.files.maxPartitionBytes``; nothing is ever collected to the
+driver except per-segment counters.
 Local-mode JVMs should run -XX:+UseParallelGC — G1 concurrent marking
 throttles these allocation-heavy stages at high thread counts.
 """
@@ -36,12 +44,18 @@ throttles these allocation-heavy stages at high thread counts.
 from __future__ import annotations
 
 import os
+import re
+import shutil
 import time
+import uuid
 from collections.abc import Iterator
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
+
 from kafka_connect_opensearch_spark.config import DOC_KEY_SEP, EngineConfig
 from kafka_connect_opensearch_spark.functions.analysis import tokenize
 from kafka_connect_opensearch_spark.operators import postings as codec
@@ -56,6 +70,26 @@ from kafka_connect_opensearch_spark.retry import call_with_retries
 
 PARTIAL_SCHEMA = "term string, doc_ids binary, tfs binary, dls binary"
 PARTIAL_COLS = ["term", "doc_ids", "tfs", "dls"]
+# in-file columns of a Hive-partitioned segment's postings and positions
+# files (``seg`` and ``rb`` live in the directory names)
+POSTINGS_TYPES = {
+    "term": pa.string(), "df": pa.int64(), "max_tf": pa.int64(),
+    **{c: pa.binary() for c in ("doc_ids", "tfs", "dls", "block_max")},
+}
+POSITIONS_COLS = ["term", "part", "n_docs", "doc_ids", "pos_counts",
+                  "positions", "blk_max_doc", "blk_lens"]
+# Peak memory of a writer task per byte of the input files its segment
+# comes from. Measured on the benchmark's generated code corpus (parquet
+# files 1.85× smaller than the text, positions on, one task per Python
+# worker): 1.9 / 3.6 / 6.3 / 12.6 MB of files per segment peaked 87 /
+# 131 / 200 / 338 MB above the worker's resting RSS, ~24 bytes per file
+# byte plus ~41 MB. Rounded up; input that compresses better costs more
+# per file byte.
+WRITER_BYTES_PER_INPUT_BYTE = 32
+# the row a writer task returns for its segment
+SEG_STATS = pa.schema([("seg", pa.string()), ("docs", pa.int64()),
+                       ("sum_dl", pa.int64()), ("terms", pa.int64()),
+                       ("postings", pa.int64())])
 
 
 def doc_id_expr(doc_key_col: str = "doc_key") -> F.Column:
@@ -196,112 +230,85 @@ def _pack_doc_group_arrow(doc_id_arr, dl_arr, tokens_arr):
     ]
 
 
-def _pack_docs_direct_by_seg(batches):
-    """Seg-aware level-1 pack (mapInArrow): input batches carry a ``seg``
-    column; each seg group within a batch packs independently (bulk path)."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
+def _merge_partials(
+    terms, doc_ids: list, tfs: list, dls: list, block_size: int
+) -> dict | None:
+    """Level-2 kernel over term-sorted packed partial rows: one postings
+    row per term, vectorized across all rows. Every buffer decodes in ONE
+    pass per column (varint_decode_concat), doc ids rebuild with a
+    reset-cumsum, one lexsort orders each term's docs, and all posting
+    lists and block maxima re-encode in one pass per column. Returns the
+    postings columns without ``seg`` (None when there is no posting)."""
+    import numpy as np
 
-    for rb in batches:
-        if rb.num_rows == 0:
-            continue
-        segs = rb.column("seg")
-        for seg in pc.unique(segs):
-            sub = rb.filter(pc.equal(segs, seg))
-            out = _pack_doc_group_arrow(
-                sub.column("doc_id"), sub.column("dl"), sub.column("tokens")
-            )
-            if out is not None:
-                seg_col = pa.array([seg.as_py()] * len(out[0]), type=pa.string())
-                yield pa.RecordBatch.from_arrays(
-                    [out[0], seg_col, *out[1:]],
-                    names=["term", "seg", *PARTIAL_COLS[1:]],
-                )
+    d_vals, d_row = codec.varint_decode_concat(doc_ids)
+    t_vals, _ = codec.varint_decode_concat(tfs)
+    l_vals, _ = codec.varint_decode_concat(dls)
+    if d_vals.size == 0:
+        return None
+    # per-partial-row delta cumsum (rows are independent delta runs)
+    run_change = np.empty(d_row.size, dtype=bool)
+    run_change[0] = True
+    np.not_equal(d_row[1:], d_row[:-1], out=run_change[1:])
+    run_starts = np.nonzero(run_change)[0]
+    # decode outputs are < 2^63 — reinterpret, don't copy
+    ids = codec.cumsum_with_resets(d_vals, run_starts)
+    tf_vals = t_vals.view("int64")
+    dl_vals = l_vals.view("int64")
+    # regroup by term: group index of each value via its row
+    row_change = np.empty(terms.size, dtype=bool)
+    row_change[0] = True
+    np.not_equal(terms[1:], terms[:-1], out=row_change[1:])
+    row_gidx = np.cumsum(row_change) - 1
+    v_gidx = row_gidx[d_row]
+    order = np.lexsort((ids, v_gidx))
+    ids, tf_vals, dl_vals, v_gidx = (
+        ids[order], tf_vals[order], dl_vals[order], v_gidx[order],
+    )
+    g_change = np.empty(v_gidx.size, dtype=bool)
+    g_change[0] = True
+    np.not_equal(v_gidx[1:], v_gidx[:-1], out=g_change[1:])
+    starts = np.nonzero(g_change)[0]
+    ends = np.append(starts[1:], v_gidx.size)
+    deltas = ids.copy()
+    deltas[1:] -= ids[:-1]
+    deltas[starts] = ids[starts]
+    dfs = ends - starts
+    max_tf = np.maximum.reduceat(tf_vals, starts)
+    # block boundaries across all groups in one reduceat
+    n_blocks = -(-dfs // block_size)
+    block_bounds = np.concatenate(
+        [np.arange(s, e, block_size) for s, e in zip(starts, ends, strict=True)]
+    )
+    bmax_all = np.maximum.reduceat(tf_vals, block_bounds)
+    bmax_starts = np.concatenate(([0], np.cumsum(n_blocks)[:-1]))
+    return {
+        "term": terms[np.nonzero(row_change)[0]],
+        "df": dfs.astype("int64"),
+        "max_tf": max_tf.astype("int64"),
+        "doc_ids": codec.varint_encode_grouped(deltas.astype("uint64"), starts),
+        "tfs": codec.varint_encode_grouped(tf_vals.astype("uint64"), starts),
+        "dls": codec.varint_encode_grouped(dl_vals.astype("uint64"), starts),
+        "block_max": codec.varint_encode_grouped(
+            bmax_all.astype("uint64"), bmax_starts
+        ),
+    }
 
 
-def _make_merge_stream(seg_name: str | None, block_size: int):
-    """Level-2 merge, vectorized across the whole chunk: all partial rows'
-    buffers decode in ONE pass per column (varint_decode_concat), doc_ids
-    reconstruct with reset-cumsum, one lexsort regroups by term, and all
-    posting lists + block maxima re-encode in one pass per column.
-
-    ``seg_name``: stamp this segment name (classic per-segment build), or
-    None → partials carry a ``seg`` column and groups key on (seg, term)
-    (bulk build)."""
-    group_key = "term" if seg_name is not None else ["seg", "term"]
+def _make_merge_stream(seg_name: str, block_size: int):
+    """mapInPandas level-2 merge over term-sorted partial rows: each chunk
+    of whole term groups runs :func:`_merge_partials`; every output row is
+    stamped with segment ``seg_name``."""
 
     def merge(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for chunk in _stream_groups(batches, group_key):
-            row_terms = chunk["term"].to_numpy()
-            d_vals, d_row = codec.varint_decode_concat(list(chunk["doc_ids"]))
-            t_vals, _ = codec.varint_decode_concat(list(chunk["tfs"]))
-            l_vals, _ = codec.varint_decode_concat(list(chunk["dls"]))
-            if d_vals.size == 0:
-                continue
-            # per-partial-row delta cumsum (rows are independent delta runs)
-            run_change = np.empty(d_row.size, dtype=bool)
-            run_change[0] = True
-            np.not_equal(d_row[1:], d_row[:-1], out=run_change[1:])
-            run_starts = np.nonzero(run_change)[0]
-            # decode outputs are < 2^63 — reinterpret, don't copy
-            ids = codec.cumsum_with_resets(d_vals, run_starts)
-            tfs = t_vals.view("int64")
-            dls = l_vals.view("int64")
-            # regroup by (seg,)term: group index of each value via its row
-            row_change = np.empty(row_terms.size, dtype=bool)
-            row_change[0] = True
-            np.not_equal(row_terms[1:], row_terms[:-1], out=row_change[1:])
-            if seg_name is None:
-                row_segs = chunk["seg"].to_numpy()
-                row_change[1:] |= row_segs[1:] != row_segs[:-1]
-            row_gidx = np.cumsum(row_change) - 1
-            v_gidx = row_gidx[d_row]
-            order = np.lexsort((ids, v_gidx))
-            ids, tfs, dls, v_gidx = (
-                ids[order], tfs[order], dls[order], v_gidx[order],
+        for chunk in _stream_groups(batches, "term"):
+            out = _merge_partials(
+                chunk["term"].to_numpy(), list(chunk["doc_ids"]),
+                list(chunk["tfs"]), list(chunk["dls"]), block_size,
             )
-            g_change = np.empty(v_gidx.size, dtype=bool)
-            g_change[0] = True
-            np.not_equal(v_gidx[1:], v_gidx[:-1], out=g_change[1:])
-            starts = np.nonzero(g_change)[0]
-            ends = np.append(starts[1:], v_gidx.size)
-            deltas = ids.copy()
-            deltas[1:] -= ids[:-1]
-            deltas[starts] = ids[starts]
-            dfs = ends - starts
-            max_tf = np.maximum.reduceat(tfs, starts)
-            # block boundaries across all groups in one reduceat
-            n_blocks = -(-dfs // block_size)
-            block_bounds = np.concatenate(
-                [np.arange(s, e, block_size) for s, e in
-                 zip(starts, ends, strict=True)]
-            )
-            bmax_all = np.maximum.reduceat(tfs, block_bounds)
-            bmax_starts = np.concatenate(([0], np.cumsum(n_blocks)[:-1]))
-            group_rows = np.nonzero(row_change)[0]
-            yield pd.DataFrame(
-                {
-                    "term": row_terms[group_rows],
-                    "seg": seg_name if seg_name is not None
-                    else chunk["seg"].to_numpy()[group_rows],
-                    "df": dfs.astype("int64"),
-                    "max_tf": max_tf.astype("int64"),
-                    "doc_ids": codec.varint_encode_grouped(
-                        deltas.astype("uint64"), starts
-                    ),
-                    "tfs": codec.varint_encode_grouped(
-                        tfs.astype("uint64"), starts
-                    ),
-                    "dls": codec.varint_encode_grouped(
-                        dls.astype("uint64"), starts
-                    ),
-                    "block_max": codec.varint_encode_grouped(
-                        bmax_all.astype("uint64"), bmax_starts
-                    ),
-                }
-            )
+            if out is not None:
+                yield pd.DataFrame({"term": out.pop("term"), "seg": seg_name,
+                                    **out})
 
     return merge
 
@@ -416,9 +423,20 @@ def build_index(
 ) -> BuildMetrics:
     """Build (or resume) an inverted index over ``source``.
 
+    Each micro-batch ``b`` (the docs with ``pmod(xxhash64(doc_id), n) ==
+    b``) becomes segment ``seg_g0_b<b>`` with its own manifest, so a
+    re-run skips committed batches. Pending batches build in waves of
+    ``ingest_wave_size`` (group commit: one writer job per wave, one
+    manifest per batch — the reference's BulkProcessor grouping,
+    OpenSearchClient.java:145-155).
+
+    ``n`` is fixed by the index's first build (:func:`_batch_count`), so
+    a resumed build puts every doc in the batch it had before.
+
     ``fail_after_batches`` is a fault-injection hook for the kill/resume
     test (mirrors the reference's offset-safety ITs,
-    integration/OpenSearchSinkTaskIT.java:120-165).
+    integration/OpenSearchSinkTaskIT.java:120-165): the build runs waves
+    of one and stops after that many commits.
     """
     config = config or EngineConfig()
     t0 = time.monotonic()
@@ -426,125 +444,62 @@ def build_index(
     store.create_if_absent(_index_meta(config))
     config = _effective_config(store, config)
     metrics = BuildMetrics()
-    committed = store.committed_batches() if resume else {}
+    batches = store.committed_batches()
+    n = _batch_count(spark, source, config, batches)
+    committed = batches if resume else {}
 
     docs = prepare_identity(source, id_cols, content_col, doc_id_col)
-    docs = docs.withColumn(
-        "_batch", F.pmod(F.xxhash64(F.col("doc_id")), F.lit(config.num_segments))
-    )
+    docs = docs.withColumn("_batch", _batch_expr(n))
+    pending = [b for b in range(n) if f"b{b:04d}" not in committed]
+    metrics.batches_skipped = n - len(pending)
+    wave_size = 1 if fail_after_batches is not None else config.ingest_wave_size
+    waves = [pending[i:i + wave_size]
+             for i in range(0, len(pending), wave_size)]
 
-    pending = [b for b in range(config.num_segments)
-               if f"b{b:04d}" not in committed]
-    metrics.batches_skipped = config.num_segments - len(pending)
-
-    if len(pending) > 1:
+    staging = os.path.join(index_dir, "staging")
+    if len(waves) > 1:
         # Stage the identity-stamped source ONCE, Hive-partitioned by
-        # _batch, so each micro-batch reads exactly one partition
-        # (partition pruning) instead of rescanning + re-hashing the full
-        # source per segment — previously num_segments full scans. Only
-        # the columns the segment build consumes are staged (identity +
-        # content); everything else is pruned at the staging write.
-        staging = os.path.join(index_dir, "staging")
+        # _batch, so each wave reads only its own partitions instead of
+        # rescanning and re-hashing the full source. Only the columns the
+        # build consumes are staged. One wave reads the source once, so
+        # it needs no staging.
         needed = ["doc_id", "doc_key", "content_sha256", content_col]
         docs.select(*needed, "_batch").write.partitionBy("_batch").mode(
             "overwrite"
         ).parquet(staging)
         docs = spark.read.parquet(staging)
 
-    def run_batch(b: int) -> SegmentMeta:
-        batch_id = f"b{b:04d}"
-        seg_name = f"seg_g0_{batch_id}"
-        seg_meta = _build_one_segment(
-            spark, docs.filter(F.col("_batch") == b), store, seg_name, config,
-            content_col=content_col,
-        )
-        # manifest rename is the commit point (O4); wrapped in the
-        # reference's retry envelope (B5) for transient FS errors.
-        call_with_retries(
-            f"commit {batch_id}",
-            lambda: store.commit_batch(
-                batch_id,
-                {"batch": batch_id, "segments": [seg_meta.__dict__],
-                 "replaces": []},
-            ),
-            max_retries=config.max_retries,
-            retry_backoff_ms=config.retry_backoff_ms,
-        )
-        return seg_meta
-
-    if fail_after_batches is not None:
-        # fault-injection path stays sequential so "fail after N commits"
-        # is deterministic (kill/resume tests)
-        for done, b in enumerate(pending):
-            if done >= fail_after_batches:
-                raise RuntimeError(
-                    f"fault injection: stopping after {done} batches"
-                )
-            _accumulate(metrics, run_batch(b))
-    elif config.build_concurrency > 1:
-        # Optional: micro-batch builds from concurrent driver threads —
-        # the connector's in-flight-bulks shape (B2, OpenSearchClient.java:
-        # 124,145-155). Off by default: one Spark job already spans the
-        # cluster, and concurrent Python-UDF stages contend for the
-        # per-executor python-worker pool (measured 2.7× slowdown at 5
-        # concurrent jobs on local[32]). Useful when segments are tiny.
-        from concurrent.futures import ThreadPoolExecutor
-
-        workers = min(config.build_concurrency, len(pending))
-        with ThreadPoolExecutor(max_workers=workers) as pool:
-            for seg_meta in pool.map(run_batch, pending):
-                _accumulate(metrics, seg_meta)
-    else:
-        # Wave (group) commit: build `ingest_wave_size` pending batches in
-        # ONE pipeline (the bulk shape — one scan of the staged source, one
-        # doc shuffle, one partials shuffle), then commit each batch's
-        # manifest individually. This is the reference's BulkProcessor
-        # grouping (OpenSearchClient.java:145-155): durability granularity
-        # stays the micro-batch (a crash mid-wave re-runs only that wave),
-        # but per-job fixed latency is paid once per wave, not per batch.
-        # Single-batch waves run through the SAME pipeline (no classic
-        # special case): one code path means one set of pack/merge UDFs
-        # and one generated-code shape, so a small warm-up build primes
-        # the python workers and codegen cache for every later build —
-        # the r6 stage isolation showed the by-seg pipeline's first run
-        # paying ~3 s of cold start that the classic-path warm-up never
-        # touched.
-        wave_size = max(1, config.ingest_wave_size)
-        for wi in range(0, len(pending), wave_size):
-            wave = pending[wi:wi + wave_size]
-            root = store.bulk_path(f"g0w{wave[0]:04d}")
-            wave_docs = docs.filter(
-                F.col("_batch").isin([int(b) for b in wave])
-            ).withColumn(
-                "seg",
-                F.concat(
-                    F.lit("seg_g0_b"),
-                    F.lpad(F.col("_batch").cast("string"), 4, "0"),
-                ),
-            ).drop("_batch")
-            metas, _ = _build_segments_pipeline(
-                spark, wave_docs, root, config, content_col,
-                job_tag=f"wave_{os.path.basename(index_dir)}_{wave[0]:04d}",
-                seg_names=[f"seg_g0_b{b:04d}" for b in wave],
+    done = 0
+    for wave in waves:
+        if fail_after_batches is not None and done >= fail_after_batches:
+            raise RuntimeError(f"fault injection: stopping after {done} batches")
+        wave_docs = docs.filter(F.col("_batch").isin(wave))
+        root = store.bulk_path(f"g0w{wave[0]:04d}")
+        names = [f"seg_g0_b{b:04d}" for b in wave]
+        by_name = {m.name: m for m in _build_segments_pipeline(
+            wave_docs, root, config, content_col, wave, names)}
+        for b, name in zip(wave, names, strict=True):
+            batch_id = f"b{b:04d}"
+            seg_meta = by_name.get(name) or SegmentMeta(
+                name=name, generation=0, doc_count=0, sum_dl=0, n_terms=0,
+                n_postings=0, path=root,
             )
-            by_name = {m.name: m for m in metas}
-            for b in wave:
-                batch_id = f"b{b:04d}"
-                seg_meta = by_name.get(f"seg_g0_{batch_id}") or SegmentMeta(
-                    name=f"seg_g0_{batch_id}", generation=0, doc_count=0,
-                    sum_dl=0, n_terms=0, n_postings=0, path=root,
-                )
-                call_with_retries(
-                    f"commit {batch_id}",
-                    lambda batch_id=batch_id, seg_meta=seg_meta: store.commit_batch(
-                        batch_id,
-                        {"batch": batch_id, "segments": [seg_meta.__dict__],
-                         "replaces": []},
-                    ),
-                    max_retries=config.max_retries,
-                    retry_backoff_ms=config.retry_backoff_ms,
-                )
-                _accumulate(metrics, seg_meta)
+            # manifest rename is the commit point (O4); wrapped in the
+            # reference's retry envelope (B5) for transient FS errors.
+            call_with_retries(
+                f"commit {batch_id}",
+                lambda batch_id=batch_id, seg_meta=seg_meta: store.commit_batch(
+                    batch_id,
+                    {"batch": batch_id, "segments": [seg_meta.__dict__],
+                     "replaces": [], "batches": n},
+                ),
+                max_retries=config.max_retries,
+                retry_backoff_ms=config.retry_backoff_ms,
+            )
+            _accumulate(metrics, seg_meta)
+            done += 1
+    # every call restages, so nothing after the last commit reads it
+    shutil.rmtree(staging, ignore_errors=True)
 
     metrics.wall_secs = time.monotonic() - t0
     return metrics
@@ -560,10 +515,10 @@ def build_index_bulk(
     doc_id_col: str | None = None,
     tag: str = "g0",
 ) -> BuildMetrics:
-    """Bulk-load mode: ALL segments in one pipeline — one scan, one doc
-    shuffle, one packed-partials shuffle, two Hive-partitioned writes.
+    """Bulk-load mode: ALL segments in one writer job — one scan, one doc
+    shuffle, one writer task per segment.
 
-    This is the initial-load path for a 100 TB corpus: per-job fixed
+    This is the initial-load path for a large corpus: per-job fixed
     latency is paid once instead of once per micro-batch, and the cluster
     stays saturated end-to-end. Segments remain independent on disk
     (``seg=<name>`` partitions), so queries and later log-structured merges
@@ -583,24 +538,11 @@ def build_index_bulk(
         return m
     root = store.bulk_path(tag)
 
+    n = _plan_segments(spark, source, config.num_segments)
     docs = prepare_identity(source, id_cols, content_col, doc_id_col)
-    docs = docs.withColumn(
-        "seg",
-        F.concat(
-            F.lit(f"seg_{tag}_b"),
-            F.lpad(
-                F.pmod(F.xxhash64(F.col("doc_id")), F.lit(config.num_segments))
-                .cast("string"),
-                4,
-                "0",
-            ),
-        ),
-    )
-    metas, obs = _build_segments_pipeline(
-        spark, docs, root, config, content_col, job_tag=bulk_id,
-        seg_names=[
-            f"seg_{tag}_b{b:04d}" for b in range(config.num_segments)
-        ],
+    metas = _build_segments_pipeline(
+        docs.withColumn("_batch", _batch_expr(n)), root, config, content_col,
+        list(range(n)), [f"seg_{tag}_b{b:04d}" for b in range(n)],
     )
     call_with_retries(
         f"commit {bulk_id}",
@@ -617,142 +559,229 @@ def build_index_bulk(
         postings_written=sum(m.n_postings for m in metas),
         segments_built=len(metas),
     )
-    metrics.details["observed_docs"] = obs["docs"]
-    metrics.details["observed_postings"] = obs["postings"]
+    # what the writer tasks counted in the files they wrote
+    metrics.details["observed_docs"] = sum(m.doc_count for m in metas)
+    metrics.details["observed_postings"] = sum(m.n_postings for m in metas)
     metrics.wall_secs = time.monotonic() - t0
     return metrics
 
 
+def _batch_expr(n: int) -> F.Column:
+    """The micro-batch (segment) a doc belongs to: a pure function of its
+    id, so a resumed build puts every doc back where it was."""
+    return F.pmod(F.xxhash64(F.col("doc_id")), F.lit(n))
+
+
+def _batch_count(
+    spark: SparkSession, source: DataFrame, config: EngineConfig,
+    committed: dict[str, dict],
+) -> int:
+    """The micro-batch count ``n`` of :func:`build_index` on an index
+    whose manifests are ``committed``. Every batch manifest records it,
+    and once one exists it is reused: a later call must keep each doc in
+    the batch it had, even after the input grew or ``maxPartitionBytes``
+    changed, or committed batches would be skipped while their docs moved
+    elsewhere. Manifests written before the count was recorded used
+    ``num_segments``."""
+    seen = {e.get("batches", config.num_segments)
+            for b, e in committed.items()
+            if re.fullmatch(r"b\d{4,}", b)}
+    if len(seen) > 1:
+        raise ValueError(f"batch manifests disagree on the batch count: "
+                         f"{sorted(seen)}")
+    return seen.pop() if seen else _plan_segments(
+        spark, source, config.num_segments)
+
+
+def _plan_segments(spark: SparkSession, source: DataFrame, floor: int) -> int:
+    """How many segments to cut ``source`` into: ``floor`` (the configured
+    ``num_segments``), raised until no segment's share of the input files,
+    times ``WRITER_BYTES_PER_INPUT_BYTE``, exceeds
+    ``spark.sql.files.maxPartitionBytes``. One writer task holds one
+    segment, so this bounds a task's memory to about the size Spark
+    budgets for one scan task (at the default 128 MB a segment gets 4 MB
+    of files). The sizes are those of the whole files (Hadoop
+    FileSystem), so a limit, filter or column pruning over them makes
+    more and smaller segments than needed, never fewer; a source with no
+    files (generated in Spark) keeps the floor. Spark's plan statistics
+    are no bound: an RDD-backed source reports ``defaultSizeInBytes``
+    (Long.MaxValue) and a join the product of its inputs' sizes."""
+    jvm = spark.sparkContext._jvm
+    limit = jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+        spark.conf.get("spark.sql.files.maxPartitionBytes")
+    )
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    total = 0
+    for f in source.inputFiles():
+        p = jvm.org.apache.hadoop.fs.Path(f)
+        total += p.getFileSystem(conf).getFileStatus(p).getLen()
+    return max(floor, -(-total * WRITER_BYTES_PER_INPUT_BYTE // limit))
+
+
 def _build_segments_pipeline(
-    spark: SparkSession,
     docs: DataFrame,
     root: str,
     config: EngineConfig,
     content_col: str,
-    job_tag: str,
-    seg_names: list[str],
-) -> tuple[list[SegmentMeta], dict]:
-    """Build every segment named by ``docs.seg`` in ONE pipeline: one doc
-    shuffle, one packed-partials shuffle, two Hive-partitioned writes under
-    ``root``. Shared by the bulk initial load (all segments) and the
-    micro-batched ingest's wave commits (a few segments per wave).
-    ``seg_names``: the closed set of values ``docs.seg`` can take (callers
-    derive the column, so they know it) — drives the per-segment
-    Observation stats without a discovery job."""
-    from pyspark.sql import Observation
-    from pyspark.storagelevel import StorageLevel
-
-    # The doc shuffle exists to spread tokenization/packing evenly (it
-    # doubles as the stopword salt) — but ANY even partitioning spreads a
-    # hot term's postings the same way, docs are one row each (the
-    # positions part-disjointness holds under any partitioning), and this
-    # lineage re-executes once per write action. When the source already
-    # arrives with enough scan partitions (size-bounded by
-    # maxPartitionBytes), the exchange is pure overhead paid 2-3x.
-    n_in = docs.rdd.getNumPartitions()
-    spread = (
-        docs
-        if n_in >= config.shuffle_partitions
-        else docs.repartition(config.shuffle_partitions, "doc_id")
+    batches: list[int],
+    names: list[str],
+) -> list[SegmentMeta]:
+    """Build segment ``names[i]`` from the docs whose ``_batch`` is
+    ``batches[i]``, all under the Hive root ``root``, in ONE Spark job:
+    scan → doc shuffle that sends each segment to its own partition →
+    tokenize (JVM) → one writer task per segment (:func:`_segment_writer`)
+    that packs and writes the segment's docs, postings and positions.
+    Shared by the bulk initial load (all segments) and the micro-batched
+    ingest's waves. ``docs`` must hold only those batches. Returns the
+    non-empty segments' metadata (an empty segment writes no files)."""
+    # a crashed earlier attempt of this root may have left files behind
+    for kind in ("docs", "postings", "positions"):
+        shutil.rmtree(os.path.join(root, f"{kind}.parquet"), ignore_errors=True)
+    task = F.create_map(
+        *[F.lit(x) for i, b in enumerate(batches) for x in (b, i)]
+    )[F.col("_batch")]
+    # repartitionById places row r in partition task(r) exactly: no two
+    # segments share a task, whatever the hash of their keys
+    spread = docs.withColumn("_task", task.cast("int")).repartitionById(
+        len(batches), "_task"
     )
-    analyzed = add_analysis(spread, content_col)
-
-    # With positions on, THREE write actions consume this lineage (docs,
-    # postings, positions) and each re-runs scan + sha256 identity + doc
-    # shuffle + tokenize. A disk-backed cache of the analyzed frame
-    # amortizes that across consumers (guide §5: reuse > recompute when
-    # recompute is this wide). For the two-consumer positions-off path the
-    # r6 A/B measured the cache break-even, so it stays off there.
-    cached = None
-    want_cache = (
-        config.cache_analyzed
-        if config.cache_analyzed is not None
-        else config.index_positions
+    analyzed = add_analysis(spread, content_col).select(
+        "_task", *DOCS_COLUMNS, "tokens"
     )
-    if want_cache:
-        cached = analyzed.persist(StorageLevel.MEMORY_AND_DISK)
-        analyzed = cached
+    rows = analyzed.mapInArrow(
+        _segment_writer(root, names, config.block_size,
+                        config.salt_partitions, config.index_positions),
+        schema=from_arrow_schema(SEG_STATS),
+    ).collect()
+    return [
+        SegmentMeta(name=r["seg"], generation=0, doc_count=r["docs"],
+                    sum_dl=r["sum_dl"], n_terms=r["terms"],
+                    n_postings=r["postings"], path=root)
+        for r in sorted(rows, key=lambda r: r["seg"])
+    ]
 
-    # Per-segment stats ride the two write jobs as Observation conditional
-    # aggregates over the (small, known) segment-name set — the previous
-    # read-back (two groupBy jobs over the ~500 just-written files)
-    # measured ~2.9 s per bulk build at local[32], pure overhead
-    # (guide §1.2: don't compute things twice).
-    seg_names = sorted(seg_names)
-    doc_obs = Observation(f"{job_tag}_docs")
-    analyzed.select(*DOCS_COLUMNS, "seg").observe(
-        doc_obs,
-        F.count(F.lit(1)).alias("n"),
-        *[
-            F.count(F.when(F.col("seg") == s, 1)).alias(f"n_{i}")
-            for i, s in enumerate(seg_names)
-        ],
-        *[
-            F.sum(F.when(F.col("seg") == s, F.col("dl"))).alias(f"sdl_{i}")
-            for i, s in enumerate(seg_names)
-        ],
-    ).write.partitionBy("seg").mode("overwrite").parquet(f"{root}/docs.parquet")
 
-    partial = analyzed.select("seg", "doc_id", "dl", "tokens").mapInArrow(
-        _pack_docs_direct_by_seg, schema=f"term string, seg string, "
-        "doc_ids binary, tfs binary, dls binary"
-    )
-    l2 = partial.repartition(
-        max(2, config.shuffle_partitions), "seg", "term"
-    ).sortWithinPartitions("seg", "term")
-    post = l2.mapInPandas(
-        _make_merge_stream(None, config.block_size), schema=POSTINGS_SCHEMA
-    )
-    post_obs = Observation(f"{job_tag}_post")
-    post.observe(
-        post_obs,
-        F.coalesce(F.sum("df"), F.lit(0)).alias("postings"),
-        *[
-            F.count(F.when(F.col("seg") == s, 1)).alias(f"t_{i}")
-            for i, s in enumerate(seg_names)
-        ],
-        *[
-            F.sum(F.when(F.col("seg") == s, F.col("df"))).alias(f"p_{i}")
-            for i, s in enumerate(seg_names)
-        ],
-    ).write.partitionBy("seg").mode("overwrite").parquet(
-        f"{root}/postings.parquet"
+def _write_parquet(table, directory: str) -> None:
+    """Write ``table`` as ``directory/part-00000.parquet``: under a
+    temporary dot-name first (Spark and pyarrow list neither dot- nor
+    underscore-prefixed files), then renamed into place, so readers never
+    see a partial file and a retried task replaces rather than adds."""
+    import pyarrow.parquet as pq
+
+    os.makedirs(directory, exist_ok=True)
+    tmp = os.path.join(directory, f".part-00000.{uuid.uuid4().hex}.tmp")
+    pq.write_table(table, tmp)
+    os.replace(tmp, os.path.join(directory, "part-00000.parquet"))
+
+
+def _pack_positions_by_part(ids, toks, salt: int) -> list:
+    """Positions rows (POSITIONS_COLS) of one batch's docs, packed
+    separately per ``part = pmod(doc_id, salt)``."""
+    import numpy as np
+
+    from kafka_connect_opensearch_spark.operators.positions import (
+        _pack_group_arrow,
     )
 
-    if config.index_positions:
-        from kafka_connect_opensearch_spark.operators import positions as pos
+    out = []
+    part = np.mod(ids.to_numpy(zero_copy_only=False), salt)
+    for p in np.unique(part):
+        sel = pa.array(part == p)
+        got = _pack_group_arrow(ids.filter(sel), toks.filter(sel))
+        if got is not None:
+            n_rows = len(got[0])
+            out.append(pa.table(
+                [got[0], pa.array(np.full(n_rows, p, dtype=np.int64)),
+                 *got[1:]],
+                names=POSITIONS_COLS,
+            ))
+    return out
 
-        # "rb" (term prefix bucket) clusters files by term range so
-        # point-term reads prune to their buckets — see
-        # positions.build_segment_positions
-        pos.build_segment_positions(analyzed, config).write.partitionBy(
-            "seg", "rb"
-        ).mode("overwrite").parquet(f"{root}/positions.parquet")
 
-    dstat, pstat = doc_obs.get, post_obs.get
-    metas = []
-    for i, seg in enumerate(seg_names):
-        n = int(dstat[f"n_{i}"] or 0)
-        if n == 0:
-            continue  # segment with no docs writes no partition
-        metas.append(
-            SegmentMeta(
-                name=seg,
-                generation=0,
-                doc_count=n,
-                sum_dl=int(dstat[f"sdl_{i}"] or 0),
-                n_terms=int(pstat[f"t_{i}"] or 0),
-                n_postings=int(pstat[f"p_{i}"] or 0),
-                path=root,
+def _segment_writer(
+    root: str, names: list[str], block_size: int, salt: int,
+    positions: bool,
+):
+    """mapInArrow body of the writer task: (_task, doc columns, tokens)
+    batches of ONE segment → its files under ``root``, and one stats row
+    (``SEG_STATS``).
+
+    One pass over the batches: each batch's docs rows are kept, and the
+    batch packs to level-1 partial postings (:func:`_pack_doc_group_arrow`)
+    and, with positions on, to positions rows per ``part =
+    pmod(doc_id, salt)`` (the doc-disjointness key merges also use). Only
+    docs rows and packed bytes outlive a batch, so a task holds the
+    segment's docs rows, postings and positions, never its token lists.
+    At the end the level-2 kernel (:func:`_merge_partials`) turns the
+    term-sorted partials into one postings row per term with
+    df/max_tf/block_max. Positions rows are not merged: a segment that
+    arrives in several batches keeps one row per (term, part) per batch,
+    which readers decode as one list (they key entries by seg, part and
+    doc)."""
+
+    def write(batches):
+        import pyarrow.compute as pc
+
+        seg = None
+        docs, partials, pos_tables = [], [], []
+        sum_dl = 0
+        for rb in batches:
+            if not rb.num_rows:
+                continue
+            mm = pc.min_max(rb.column("_task"))
+            lo, hi = mm["min"].as_py(), mm["max"].as_py()
+            seg = seg or names[lo]
+            if names[lo] != seg or names[hi] != seg:
+                raise RuntimeError(
+                    f"writer task of {seg} got another segment's rows")
+            docs.append(rb.select(DOCS_COLUMNS))
+            sum_dl += pc.sum(rb.column("dl")).as_py() or 0
+            ids, toks = rb.column("doc_id"), rb.column("tokens")
+            out = _pack_doc_group_arrow(ids, rb.column("dl"), toks)
+            if out is not None:
+                partials.append(pa.table(out, names=PARTIAL_COLS))
+            if positions:
+                pos_tables += _pack_positions_by_part(ids, toks, salt)
+        if seg is None:
+            return  # no docs: the segment writes no files
+        _write_parquet(pa.Table.from_batches(docs),
+                       os.path.join(root, "docs.parquet", f"seg={seg}"))
+
+        n_terms = n_postings = 0
+        if partials:
+            tbl = pa.concat_tables(partials).sort_by("term")
+            post = _merge_partials(
+                tbl["term"].to_numpy(),
+                tbl["doc_ids"].to_pylist(), tbl["tfs"].to_pylist(),
+                tbl["dls"].to_pylist(), block_size,
             )
+            n_terms, n_postings = len(post["term"]), int(post["df"].sum())
+            _write_parquet(
+                pa.table({k: pa.array(v, type=POSTINGS_TYPES[k])
+                          for k, v in post.items()}),
+                os.path.join(root, "postings.parquet", f"seg={seg}"),
+            )
+        if pos_tables:
+            # one file per term-prefix bucket ``rb``, term-sorted inside:
+            # a point-term read prunes to its bucket's files, then to row
+            # groups by min/max term (see positions.build_segment_positions)
+            tbl = pa.concat_tables(pos_tables).sort_by(
+                [("term", "ascending"), ("part", "ascending")])
+            rb_col = pc.utf8_slice_codeunits(tbl["term"], 0, 1)
+            for bucket in pc.unique(rb_col).to_pylist():
+                _write_parquet(
+                    tbl.filter(pc.equal(rb_col, bucket)),
+                    os.path.join(root, "positions.parquet", f"seg={seg}",
+                                 f"rb={bucket}"),
+                )
+        yield pa.RecordBatch.from_pylist(
+            [{"seg": seg, "docs": sum(b.num_rows for b in docs),
+              "sum_dl": sum_dl,
+              "terms": n_terms, "postings": n_postings}],
+            schema=SEG_STATS,
         )
-    obs = {
-        "docs": int(dstat["n"]),
-        "postings": int(pstat["postings"]),
-    }
-    if cached is not None:
-        cached.unpersist(blocking=True)
-    return metas, obs
+
+    return write
 
 
 def _accumulate(metrics: BuildMetrics, seg_meta: SegmentMeta) -> None:

@@ -12,9 +12,10 @@ rows move as they are; nothing is exploded to one row per posting:
 
   losers    (seg, doc_id, dl) of every copy the merge drops: the older
             copies of a re-ingested doc and the tombstoned docs. Callers
-            that know them pass them in (reconcile's driver-side probe);
-            otherwise one ids-only Spark job finds the duplicated doc ids
-            and the driver ranks their copies by (seq, segment name).
+            that know them pass them in (reconcile's probe); otherwise a
+            driver-side pyarrow scan of the inputs' doc ids finds the
+            duplicated ones, and the driver ranks their copies by (seq,
+            segment name).
   docs      union of the inputs' docs, minus the losers (a per-segment
             ``doc_id IN (...)`` filter in the scan stage).
   postings  stored packed rows → mapInArrow loser filter (a row holding a
@@ -171,15 +172,14 @@ def resolve_losers(
 
 
 def _duplicate_ids(
-    spark: SparkSession, store: SegmentStore, metas: list[SegmentMeta]
+    store: SegmentStore, metas: list[SegmentMeta]
 ) -> np.ndarray:
-    """Doc ids held by two or more of ``metas`` — one ids-only Spark job;
-    only the (few) duplicated ids reach the driver."""
-    rows = (
-        store.read_docs(spark, metas).groupBy("doc_id").count()
-        .filter(F.col("count") > 1).select("doc_id").collect()
+    """Doc ids held by two or more of ``metas`` — a driver-side pyarrow
+    scan of their docs files (:func:`_scan_docs`); starts no Spark job."""
+    ids, counts = np.unique(
+        _scan_docs(store, metas)["doc_id"].to_numpy(), return_counts=True
     )
-    return np.array([r[0] for r in rows], dtype=np.int64)
+    return ids[counts > 1]
 
 
 def drop_losers(
@@ -278,7 +278,7 @@ def merge_segments(
 
     ``losers``: the (seg, doc_id, dl) copies to drop, when the caller
     already knows them (``reconcile_updates``); None finds the inputs'
-    duplicated docs with one ids-only Spark job.
+    duplicated docs with a driver-side scan (no Spark job).
     """
     config = config or EngineConfig()
     t0 = time.monotonic()
@@ -295,7 +295,7 @@ def merge_segments(
     seg_name = f"seg_g{new_gen}_m{int(time.time())}_{uuid.uuid4().hex[:8]}"
 
     if losers is None:
-        dup = _duplicate_ids(spark, store, metas) if len(metas) > 1 else []
+        dup = _duplicate_ids(store, metas) if len(metas) > 1 else []
         losers = resolve_losers(store, metas, dup)[0]
     dropped = losers[losers["seg"].isin(names)]
     if delete_doc_keys is not None:
@@ -412,8 +412,8 @@ def reconcile_updates(
     ``dl`` columns of every live segment's docs files driver-side with
     pyarrow, filtered by ``isin(new ids)`` while streaming — O(batch)
     memory and no Spark job. None probes all active segments pairwise
-    (one ids-only Spark job for the duplicated ids, then the same
-    driver-side ranking). Copies rank by (seq, segment name): the newest
+    (the same driver-side scan over every segment's doc ids, then the
+    same ranking). Copies rank by (seq, segment name): the newest
     commit wins. Returns the merge metrics, or None when there was
     nothing to do."""
     store = SegmentStore(index_dir)
@@ -424,7 +424,7 @@ def reconcile_updates(
         new = [m for m in metas if m.name in set(new_segment_names)]
         ids = _scan_docs(store, new)["doc_id"].to_numpy()
     else:
-        ids = _duplicate_ids(spark, store, metas)
+        ids = _duplicate_ids(store, metas)
     losers, names = resolve_losers(store, metas, ids)
     if not names:
         return None

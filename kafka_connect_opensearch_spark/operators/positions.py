@@ -5,10 +5,10 @@ source-table rescan).
 Lucene keeps positions inside the same segments merges rewrite
 (``IndexOptions.DOCS_AND_FREQS_AND_POSITIONS``); here each segment gets a
 ``positions.parquet`` beside its ``postings.parquet`` — built by the same
-build pipelines (classic per-segment and bulk/wave), committed by the
-same manifests, and rewritten by the same log-structured merges
-(newest-commit-wins + tombstone deletes) — so positional
-queries can never go stale against the frequency index. Enabled per
+writers (the bulk/wave segment writer and the streaming per-segment
+build), committed by the same manifests, and rewritten by the same
+log-structured merges (newest-commit-wins + tombstone deletes) — so
+positional queries can never go stale against the frequency index. Enabled per
 index via ``EngineConfig.index_positions`` (the per-field positions
 flag of a Lucene mapping, re-cast per index).
 
@@ -20,9 +20,10 @@ groups::
     pos_counts binary  -- varint positions-per-doc, aligned with doc_ids
     positions binary   -- delta varints, reset at each doc boundary
 
-``part`` is the pack partition (derived from the doc-hash repartition),
-so rows are **doc-disjoint across (seg, part) groups**: a doc's entries
-for every term live in exactly one group. Distributed phrase/NEAR
+``part`` is ``pmod(doc_id, salt_partitions)`` (bulk/wave writer and
+merges) or the pack partition of the doc-hash repartition (streaming
+build), so rows are **doc-disjoint across (seg, part) groups**: a doc's
+entries for every term live in exactly one group. Distributed phrase/NEAR
 intersection therefore runs per (seg, part) group with exact
 union-of-groups semantics — the per-shard phrase execution the reference
 delegates to OpenSearch ``_search``
@@ -147,7 +148,7 @@ DECODED_POSITIONS_SCHEMA = (
 
 
 # --------------------------------------------------------------------------
-# build: Arrow pack (shared by classic per-segment and bulk/wave pipelines)
+# build: Arrow pack (shared by the segment writer and the streaming build)
 # --------------------------------------------------------------------------
 
 
@@ -268,20 +269,18 @@ def _pack_positions_by_seg(
 
 
 def build_segment_positions(
-    analyzed: DataFrame, config: EngineConfig, seg_name: str | None = None
+    analyzed: DataFrame, config: EngineConfig, seg_name: str
 ) -> DataFrame:
-    """(doc_id, tokens[, seg]) → packed positions rows (POSITIONS_SCHEMA),
-    repartitioned by (seg, term) and term-sorted so parquet row-group
-    min/max stats prune query-term lookups.
+    """(doc_id, tokens) → packed positions rows (POSITIONS_SCHEMA) of
+    segment ``seg_name`` (the streaming per-segment build), repartitioned
+    by term prefix and term-sorted so parquet row-group min/max stats
+    prune query-term lookups.
 
     ``analyzed`` must already be doc-hash partitioned (the same spread the
     postings build uses): that partitioning IS the ``part`` doc-disjointness
-    invariant. ``seg_name`` stamps a constant segment (classic per-segment
-    build); None expects a ``seg`` column (bulk/wave pipeline)."""
-    src = analyzed
-    if seg_name is not None:
-        src = src.withColumn("seg", F.lit(seg_name))
-    src = src.withColumn("part", F.spark_partition_id().cast("long"))
+    invariant."""
+    src = analyzed.withColumn("seg", F.lit(seg_name)).withColumn(
+        "part", F.spark_partition_id().cast("long"))
     packed = src.select("seg", "part", "doc_id", "tokens").mapInArrow(
         _pack_positions_by_seg, schema=POSITIONS_SCHEMA
     )

@@ -76,11 +76,9 @@ def main() -> None:
                             shuffle_partitions=shuffle)
     build_index(spark, corpus.limit(500), f"{w}/warm", cfg_warm)
 
-    inflight = int(os.environ.get("EXP_INFLIGHT", "1"))
     mode = os.environ.get("EXP_MODE", "bulk")
     cfg = EngineConfig(num_segments=segs, salt_partitions=16,
-                       shuffle_partitions=shuffle,
-                       build_concurrency=inflight)
+                       shuffle_partitions=shuffle)
     t0 = time.monotonic()
     if mode == "bulk":
         m = build_index_bulk(spark, corpus, f"{w}/idx", cfg)

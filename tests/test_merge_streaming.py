@@ -601,6 +601,47 @@ def test_reconcile_probe_starts_no_spark_job(spark, tmp_path, monkeypatch):
     assert losers["dl"].tolist() == [2]
 
 
+def test_duplicate_probe_starts_no_spark_job(spark, tmp_path, monkeypatch):
+    """The probe a merge runs when no caller hands it losers (auto_merge,
+    backpressure, plain merges, reconcile over all segments) reads doc
+    ids driver-side: disjoint inputs and an overlap are both found
+    without a Spark job."""
+    from kafka_connect_opensearch_spark.operators import merge
+
+    d = str(tmp_path / "idx")
+    cfg = EngineConfig(num_segments=2, salt_partitions=2,
+                       shuffle_partitions=2)
+    v1 = spark.createDataFrame(
+        [(1, "alpha beta"), (2, "gamma"), (3, "delta")],
+        "doc_id long, text string",
+    )
+    build_index(spark, v1, d, cfg, content_col="text", doc_id_col="doc_id")
+    store = SegmentStore(d)
+    base = store.active_segments()
+    old_seg = next(
+        m.name for m in base
+        if 1 in {r["doc_id"] for r in store.read_docs(spark, [m]).collect()}
+    )
+    upd = _commit_reingest(spark, store, [(1, "alpha omega")], cfg, "upd")
+
+    sc = spark.sparkContext
+    calls = []
+    monkeypatch.setattr(merge, "merge_segments",
+                        lambda *a, **kw: calls.append(kw))
+    sc.setJobGroup("duplicate_probe", "driver-side duplicate probe")
+    try:
+        assert merge._duplicate_ids(store, base).tolist() == []
+        assert merge._duplicate_ids(
+            store, store.active_segments()).tolist() == [1]
+        merge.reconcile_updates(spark, d, cfg)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("duplicate_probe") == []
+    (kw,) = calls
+    assert kw["segment_names"] == sorted([old_seg, upd])
+    assert kw["losers"][["seg", "doc_id"]].values.tolist() == [[old_seg, 1]]
+
+
 @pytest.mark.parametrize("seed", [5, 23])
 def test_randomized_latest_wins_parity(spark, tmp_path, seed):
     """Seeded sequences of ingest, re-ingest, tombstone delete, merge,
