@@ -6,6 +6,7 @@ harness. This file exists so optimization-round A/Bs can be re-run:
     python bench_extra.py queries  [sf_dir] [names...]  # per-query collect() timing
     python bench_extra.py plans    [sf_dir] [names...]  # capture explain("formatted")
     python bench_extra.py build    [n_docs]             # stage-isolated bulk build
+    python bench_extra.py kernel   [reps]               # BM25 segment kernel, no Spark
 """
 
 from __future__ import annotations
@@ -117,6 +118,90 @@ def build_stages(n_docs: int) -> None:
     spark.stop()
 
 
+def _kernel_segment(n_docs: int = 20_000, seed: int = 7):
+    """One synthetic segment as packed postings rows (the on-disk
+    layout): a stopword list on 90% of the docs, two mid lists (20%,
+    15%) and a rare list (50 docs), each list's ids, tfs, dls and block
+    maxima encoded with ``varint_encode_grouped``."""
+    import numpy as np
+    import pandas as pd
+
+    from kafka_connect_opensearch_spark.config import POSTINGS_BLOCK_SIZE
+    from kafka_connect_opensearch_spark.operators.postings import (
+        varint_encode_grouped,
+    )
+
+    rng = np.random.default_rng(seed)
+    dl = rng.integers(20, 400, n_docs)
+    sizes = {"stop": int(0.9 * n_docs), "mid_a": int(0.2 * n_docs),
+             "mid_b": int(0.15 * n_docs), "rare": 50}
+    deltas, tfs, dls, blk, starts, bstarts = [], [], [], [], [0], [0]
+    for size in sizes.values():
+        d = np.sort(rng.choice(n_docs, size, replace=False))
+        t = rng.geometric(0.5, size)
+        deltas.append(np.diff(d, prepend=0))
+        tfs.append(t)
+        dls.append(dl[d])
+        blk.append(np.maximum.reduceat(
+            t, np.arange(0, size, POSTINGS_BLOCK_SIZE)))
+        starts.append(starts[-1] + size)
+        bstarts.append(bstarts[-1] + blk[-1].size)
+    starts, bstarts = np.array(starts[:-1]), np.array(bstarts[:-1])
+    pdf = pd.DataFrame({
+        "term": list(sizes),
+        "seg": "s0",
+        "df": list(sizes.values()),
+        "doc_ids": varint_encode_grouped(np.concatenate(deltas), starts),
+        "tfs": varint_encode_grouped(np.concatenate(tfs), starts),
+        "dls": varint_encode_grouped(np.concatenate(dls), starts),
+        "block_max": varint_encode_grouped(np.concatenate(blk), bstarts),
+    })
+    return pdf, sizes, float(dl.mean()), n_docs
+
+
+def kernel_bench(reps: int = 30) -> None:
+    """Postings/s of the per-segment BM25 kernel for each query shape,
+    on one synthetic 20k-doc segment (median of ``reps`` calls)."""
+    import numpy as np
+
+    from kafka_connect_opensearch_spark.config import EngineConfig
+    from kafka_connect_opensearch_spark.operators.bm25 import (
+        QuerySpec,
+        bm25_idf,
+        score_segment,
+    )
+
+    pdf, sizes, avgdl, n_docs = _kernel_segment()
+    idf = {t: bm25_idf(n_docs, df) for t, df in sizes.items()}
+    allowed = np.sort(np.random.default_rng(1).choice(
+        n_docs, n_docs // 100, replace=False)).astype(np.int64)
+
+    def spec(terms, **kw):
+        return QuerySpec({t: idf[t] for t in terms}, avgdl, EngineConfig.k1,
+                         EngineConfig.b, 128, **kw)
+
+    every = list(sizes)
+    shapes = {  # name → (spec, restrict); every list is fed to the kernel
+        "or": (spec(every), None),
+        "and": (spec(every, must=tuple(every)), None),
+        "bool": (spec(["mid_a", "stop", "rare"], must=("mid_a",),
+                      must_not=("mid_b",)), None),
+        "msm2": (spec(every, min_should_match=2), None),
+        "count": (spec(every, output="count"), None),
+        "filter": (spec(every), allowed),
+    }
+    n_post = sum(sizes.values())
+    for name, (sp, restrict) in shapes.items():
+        samples = []
+        for _ in range(reps):
+            t0 = time.perf_counter()
+            score_segment(sp, pdf, restrict)
+            samples.append(time.perf_counter() - t0)
+        med = float(np.median(samples))
+        print(f"{name:7s} {med * 1e3:8.2f} ms  "
+              f"{n_post / med / 1e6:7.2f} M postings/s", flush=True)
+
+
 if __name__ == "__main__":
     mode = sys.argv[1] if len(sys.argv) > 1 else "queries"
     if mode == "queries":
@@ -128,3 +213,5 @@ if __name__ == "__main__":
         capture_plans(sf, sys.argv[3:], suffix)
     elif mode == "build":
         build_stages(int(sys.argv[2]) if len(sys.argv) > 2 else 20000)
+    elif mode == "kernel":
+        kernel_bench(int(sys.argv[2]) if len(sys.argv) > 2 else 30)

@@ -4,31 +4,46 @@ Okapi BM25 with OpenSearch/Lucene defaults and formula (pinned by the north
 rule): ``idf = ln(1 + (N - df + 0.5)/(df + 0.5))``, ``score = Σ_t qtf_t ·
 idf_t · tf·(k1+1)/(tf + k1·(1−b+b·dl/avgdl))`` with k1=1.2, b=0.75.
 
-Execution shape (scales to 10^12 docs because nothing doc-sized ever
-reaches the driver):
+Every query runs in three steps, whatever its shape:
 
-1. term-dictionary lookup: scan only postings rows of the query terms —
-   Catalyst pushes ``term IN (...)`` into the parquet scan and the
-   sorted-by-term segment layout prunes row groups via min/max stats.
-2. per-segment scoring: segments partition the doc space disjointly, so
-   every doc's postings live in one segment → ``groupBy(seg).applyInPandas``
-   scores each segment independently in numpy and emits only its local
-   top-k.
-3. global merge: ``ORDER BY score DESC, doc_id ASC LIMIT k`` over
-   (#segments × k) rows — Spark plans TakeOrderedAndProject.
+1. compile: :meth:`IndexReader._compile` turns the query into a
+   :class:`QuerySpec` — per-term weights (qtf · boost · idf from the
+   term dictionary), ``must`` / ``must_not`` terms, ``min_should_match``
+   and the output (top-k, ids only or count only) — plus the terms to
+   fetch and their dfs. A ``mode`` other than ``"or"``/``"and"`` is
+   rejected here.
+2. kernel: :func:`score_segment` is the one per-segment function that
+   decodes a segment's posting rows, selects candidates by the spec's
+   rules and scores them. Segments partition the doc space disjointly,
+   so every doc's postings live in one segment and the kernel needs no
+   other segment's data.
+3. executor: :meth:`IndexReader._run_segments` runs the kernel on one of
+   three paths. Under ``local_threshold`` summed postings the
+   coordinator fetches the rows with pyarrow (memoized per snapshot) and
+   merges the per-segment outputs itself — the scatter-gather path of a
+   search frontend, tens of ms and no Spark job. Above it, each segment
+   runs in a ``groupBy(seg).applyInPandas`` task and Spark merges the
+   per-segment top-k (``ORDER BY score DESC, doc_id ASC LIMIT k`` over
+   #segments × k rows), so nothing doc-sized reaches the driver; its
+   scan pushes ``term IN (...)`` into parquet, and the term-sorted
+   layout prunes row groups by min/max stats. A filter too wide to
+   collect is partitioned per segment and cogrouped with the postings
+   instead.
 
 Pruning: MaxScore partitioning with block-max refinement. Terms are split
 into essential/non-essential by per-term upper bounds (from stored max_tf);
 docs appearing only in non-essential (stopword) lists are skipped when their
 bound cannot reach the running threshold; survivors are **rescored exactly
 in sorted-term order** so final scores are bit-identical to the brute-force
-oracle regardless of pruning (rank-identical parity, SURVEY.md §7.4).
+oracle regardless of pruning or path (rank-identical parity, SURVEY.md
+§7.4).
 """
 
 from __future__ import annotations
 
 import math
 from collections import Counter
+from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
@@ -43,6 +58,18 @@ from kafka_connect_opensearch_spark.functions.analysis import (
 from kafka_connect_opensearch_spark.operators import postings as codec
 from kafka_connect_opensearch_spark.operators.segments import SegmentStore
 
+# default local_threshold: a query whose terms hold at most this many
+# postings in total runs on the coordinator, a heavier one per segment
+LOCAL_POSTINGS_MAX = 2_000_000
+# default max_pushdown_ids: a filter of at most this many ids is collected
+# and pushed into the kernel, a wider one is cogrouped per segment
+PUSHDOWN_IDS_MAX = 2_000_000
+_OUTPUT_SCHEMAS = {
+    "topk": "doc_id long, score double",
+    "ids": "doc_id long",
+    "count": "n long",
+}
+
 
 def bm25_idf(n_docs: int, df: int) -> float:
     return math.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
@@ -55,30 +82,26 @@ def bm25_tf_weight(tf, dl, avgdl: float, k1: float, b: float):
 class IndexReader:
     """Query-side view of an index directory.
 
-    ``use_dsv2=True`` routes term-restricted distributed reads through
-    the DSv2 segment relation (sources/segment_scan.py — ONE BatchScan,
-    term/seg filters absorbed). Default False: the measured Python-scan
-    tax (~2-3× vs the JVM parquet scan at every size we can measure, see
-    BENCH/DSV2.md) makes the classic pushed-filter union the faster
-    plan; the per-query dataset-discovery cost that motivated DSv2 is
-    eliminated by caching the resolved DataFrame per manifest snapshot
-    instead."""
+    Every query method compiles its query into a :class:`QuerySpec`
+    (:meth:`_compile`) and hands it to the one executor
+    (:meth:`_run_segments`), which runs the one per-segment kernel
+    (:func:`score_segment`) on the coordinator or in Spark — so both
+    paths of every query decide candidates and scores with the same
+    code and return bit-identical results. Distributed reads use the
+    JVM parquet scan, resolved once per manifest snapshot, with the
+    term filter pushed into it."""
 
-    def __init__(self, spark: SparkSession, index_dir: str,
-                 use_dsv2: bool = False):
+    def __init__(self, spark: SparkSession, index_dir: str):
         self.spark = spark
         self.store = SegmentStore(index_dir)
         meta = self.store.meta()
         self.k1 = float(meta["k1"])
         self.b = float(meta["b"])
         self.block_size = int(meta.get("block_size", 128))
-        self._use_dsv2 = use_dsv2
         self._segments = self.store.active_segments()
         self._stats = self.store.global_stats()
         self._datasets = None  # lazy pyarrow dataset handles
-        self._scan_files: dict[str, list] = {}  # DSv2 pinned file lists
         self._df_cache: dict[str, DataFrame] = {}  # resolved-scan reuse
-        self._dsv2_ok: bool | None = None
         # per-snapshot memos for the coordinator query path: term → df
         # (dictionary lookups) and term → packed postings rows (the
         # pyarrow fetch) — both cleared wholesale on refresh()
@@ -109,7 +132,6 @@ class IndexReader:
         self._segments = self.store.active_segments()
         self._stats = self.store.global_stats()
         self._datasets = None
-        self._scan_files = {}
         self._df_cache = {}
         self._stats_cache = {}
         self._rows_cache = {}
@@ -161,15 +183,7 @@ class IndexReader:
         The resolved scan DataFrame is cached per manifest snapshot, so
         file listing / schema resolution is paid once per snapshot, not
         per query (the many-segment-store discovery cost VERDICT r4 #1
-        targeted); the term filter is pushed into the parquet scan.
-        With ``use_dsv2=True`` term-restricted reads instead go through
-        the DSv2 segment relation: ONE BatchScan node, filter absorbed
-        as ``PushedFilters`` (plan-pinned in tests/test_plans.py),
-        measured slower than this default (BENCH/DSV2.md)."""
-        if terms is not None and self._use_dsv2:
-            df = self._segment_scan("postings")
-            if df is not None:
-                return df.filter(F.col("term").isin(list(terms)))
+        targeted); the term filter is pushed into the parquet scan."""
         if "postings" not in self._df_cache:
             self._df_cache["postings"] = self.store.read_postings(
                 self.spark, self._segments
@@ -178,28 +192,6 @@ class IndexReader:
         if terms is not None:
             df = df.filter(F.col("term").isin(list(terms)))  # pushed to scan
         return df
-
-    def _segment_scan(self, kind: str):
-        """The one-scan-node DSv2 relation over the pinned snapshot, or
-        ``None`` when the Python-datasource pushdown conf can't be
-        enabled (classic union read takes over)."""
-        from kafka_connect_opensearch_spark.sources import segment_scan
-
-        if self._dsv2_ok is False:
-            return None
-        if kind not in self._scan_files:
-            self._scan_files[kind] = segment_scan.segment_files(
-                self.store, self._segments, kind
-            )
-        try:
-            df = segment_scan.scan_df(
-                self.spark, kind, self._scan_files[kind]
-            )
-            self._dsv2_ok = True
-            return df
-        except Exception:
-            self._dsv2_ok = False
-            return None
 
     def docs(self) -> DataFrame:
         return self.store.read_docs(self.spark, self._segments)
@@ -241,81 +233,36 @@ class IndexReader:
         query: str,
         k: int = 10,
         mode: str = "or",
-        local_threshold: int = 2_000_000,
+        local_threshold: int = LOCAL_POSTINGS_MAX,
     ) -> DataFrame:
         """Top-k ``(doc_id, score)`` for ``query``; deterministic tie-break
-        on doc_id (rank-identical requirement).
+        on doc_id (rank-identical requirement). ``mode="or"`` matches any
+        query term, ``"and"`` every one.
 
-        Adaptive execution: when the query terms' total postings fit under
-        ``local_threshold``, the coordinator scores them directly from a
-        pyarrow scan (the scatter-gather path every search engine's
-        frontend takes — tens of ms, no Spark job). Heavier queries run
-        the distributed per-segment scorer. Both paths share the same
-        numpy scoring functions, so results are bit-identical.
-        """
-        if mode not in ("or", "and"):
-            raise ValueError("mode must be 'or' or 'and'")
-        qterms = sorted(Counter(tokenize_py(query)).items())  # [(term, qtf)]
-        n_docs, avgdl = self._stats
-        empty = self.spark.createDataFrame([], "doc_id long, score double")
-        if not qterms or n_docs == 0:
-            return empty
-        dfs = self.term_stats([t for t, _ in qterms])
-        if mode == "and" and any(t not in dfs for t, _ in qterms):
-            return empty
-        qterms = [(t, q) for t, q in qterms if t in dfs]
-        if not qterms:
-            return empty
-        weights = {
-            t: qtf * bm25_idf(n_docs, dfs[t]) for t, qtf in qterms
-        }
-        scorer = _make_segment_scorer(
-            weights, avgdl, self.k1, self.b, k, mode, self.block_size
+        Adaptive execution (:meth:`_run_segments`): when the query terms'
+        total postings fit under ``local_threshold``, the coordinator
+        scores them directly from a pyarrow scan; heavier queries run the
+        kernel per segment in Spark. Results are bit-identical."""
+        return self._run_segments(
+            *self._compile(Counter(tokenize_py(query)), mode=mode, k=k),
+            local_threshold,
         )
-        total_postings = sum(dfs.values())
-        if total_postings <= local_threshold:
-            rows = self._local_topk(
-                [t for t, _ in qterms], scorer, k
-            )
-            if not rows:
-                return empty
-            # pandas input takes the Arrow-backed createDataFrame path
-            # (a list of tuples serializes row-by-row through the JVM)
-            pdf = pd.DataFrame(rows, columns=["doc_id", "score"]).astype(
-                {"doc_id": "int64", "score": "float64"}
-            )
-            return self.spark.createDataFrame(pdf, "doc_id long, score double")
-        local_topk = (
-            self.postings([t for t, _ in qterms])
-            .groupBy("seg")
-            .applyInPandas(scorer, schema="doc_id long, score double")
-        )
-        return local_topk.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
     def search_topk(
         self, query: str, k: int = 10, mode: str = "or"
     ) -> list[tuple[int, float]]:
         """Native search API: top-k ``(doc_id, score)`` as plain Python —
         the engine-latency path (no Spark job, no DataFrame round-trip).
-        Always coordinator-local; results are bit-identical to
-        :meth:`search` (same scoring functions)."""
-        if mode not in ("or", "and"):
-            raise ValueError("mode must be 'or' or 'and'")
-        qterms = sorted(Counter(tokenize_py(query)).items())
-        n_docs, avgdl = self._stats
-        if not qterms or n_docs == 0:
-            return []
-        dfs = self.term_stats([t for t, _ in qterms])
-        if mode == "and" and any(t not in dfs for t, _ in qterms):
-            return []
-        qterms = [(t, q) for t, q in qterms if t in dfs]
-        if not qterms:
-            return []
-        weights = {t: qtf * bm25_idf(n_docs, dfs[t]) for t, qtf in qterms}
-        scorer = _make_segment_scorer(
-            weights, avgdl, self.k1, self.b, k, mode, self.block_size
+        Always the executor's coordinator path; results are bit-identical
+        to :meth:`search`."""
+        spec, terms, _ = self._compile(
+            Counter(tokenize_py(query)), mode=mode, k=k
         )
-        return self._local_topk([t for t, _ in qterms], scorer, k)
+        if not terms:
+            return []
+        out = self._coordinator(spec, terms)
+        return list(zip(out["doc_id"].tolist(), out["score"].tolist(),
+                        strict=True))
 
     def search_bool(
         self,
@@ -323,10 +270,10 @@ class IndexReader:
         should: str = "",
         must_not: str = "",
         k: int = 10,
-        local_threshold: int = 2_000_000,
+        local_threshold: int = LOCAL_POSTINGS_MAX,
         filter_ids: DataFrame | None = None,
         id_col: str = "doc_id",
-        max_pushdown_ids: int = 2_000_000,
+        max_pushdown_ids: int = PUSHDOWN_IDS_MAX,
     ) -> DataFrame:
         """OpenSearch bool-query semantics (the reference delegates these to
         ``_search``, OpenSearchHelperClient.java:106-109): a match must
@@ -334,88 +281,19 @@ class IndexReader:
         BM25 over ``must`` + ``should`` terms present. With no ``must``,
         any ``should`` term matches. ``filter_ids`` is the bool query's
         fourth clause — filter context, restricting hits without touching
-        scores or term statistics: a selective set pushes into the scorer
-        like :meth:`search_filtered` (broadcast once per executor), a
-        wide one is partitioned per segment and cogrouped with the
-        postings so only filter∩match docs are ever scored.
+        scores or term statistics, executed as in :meth:`search_filtered`.
         Deterministic (score desc, doc_id) tie-break, same adaptive
         local/distributed execution as :meth:`search`."""
-        restrict = None
-        wide_ids = None
+        must_t = set(tokenize_py(must))
+        compiled = self._compile(
+            dict.fromkeys(must_t | set(tokenize_py(should)), 1),
+            must=sorted(must_t), must_not=tokenize_py(must_not), k=k,
+        )
+        flt = None
         if filter_ids is not None:
-            ids = filter_ids.select(F.col(id_col).alias("doc_id"))
-            n_filter = ids.count()
-            if n_filter == 0:
-                return self.spark.createDataFrame(
-                    [], "doc_id long, score double"
-                )
-            if n_filter <= max_pushdown_ids:
-                restrict = np.sort(np.array(
-                    [r["doc_id"] for r in ids.distinct().collect()],
-                    dtype=np.int64,
-                ))
-            else:
-                wide_ids = ids
-        must_t = sorted(set(tokenize_py(must)))
-        should_t = sorted(set(tokenize_py(should)) - set(must_t))
-        not_t = sorted(set(tokenize_py(must_not)))
-        n_docs, avgdl = self._stats
-        empty = self.spark.createDataFrame([], "doc_id long, score double")
-        score_terms = sorted(set(must_t) | set(should_t))
-        if not score_terms or n_docs == 0:
-            return empty
-        dfs = self.term_stats(score_terms + not_t)
-        if any(t not in dfs for t in must_t):
-            return empty
-        weights = {
-            t: bm25_idf(n_docs, dfs[t]) for t in score_terms if t in dfs
-        }
-        not_present = [t for t in not_t if t in dfs]
-        fetch_terms = sorted(set(weights) | set(not_present))
-        total_postings = sum(dfs[t] for t in fetch_terms)
-        if wide_ids is not None:
-            # wide filter: partition the filter ids per segment (docs-table
-            # semi-join, both sides keyed, nothing collected) and cogroup
-            # with the postings — each segment's scorer restricts its
-            # posting lists FIRST, so only filter∩match docs are scored,
-            # never the full match set
-            k1, b_, bs = self.k1, self.b, self.block_size
-            out = self._cogrouped_filtered_scores(
-                fetch_terms, wide_ids,
-                lambda rid: _make_bool_segment_scorer(
-                    weights, must_t, not_present, avgdl, k1, b_,
-                    k, bs, restrict_ids=rid,
-                ),
-            )
-            return out.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-        if total_postings <= local_threshold:
-            scorer = _make_bool_segment_scorer(
-                weights, must_t, not_present, avgdl, self.k1, self.b, k,
-                self.block_size, restrict_ids=restrict,
-            )
-            rows = self._local_topk(fetch_terms, scorer, k)
-            if not rows:
-                return empty
-            pdf = pd.DataFrame(rows, columns=["doc_id", "score"]).astype(
-                {"doc_id": "int64", "score": "float64"}
-            )
-            return self.spark.createDataFrame(pdf, "doc_id long, score double")
-        scorer = _make_bool_segment_scorer(
-            weights, must_t, not_present, avgdl, self.k1, self.b, k,
-            self.block_size,
-            restrict_ids=(
-                self._track_broadcast(
-                    self.spark.sparkContext.broadcast(restrict)
-                )
-                if restrict is not None else None
-            ),
-        )
-        local_topk = (
-            self.postings(fetch_terms)
-            .groupBy("seg")
-            .applyInPandas(scorer, schema="doc_id long, score double")
-        )
-        return local_topk.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+            flt = (filter_ids.select(F.col(id_col).alias("doc_id")),
+                   max_pushdown_ids)
+        return self._run_segments(*compiled, local_threshold, flt)
 
     def search_filtered(
         self,
@@ -424,7 +302,7 @@ class IndexReader:
         k: int = 10,
         mode: str = "or",
         id_col: str = "doc_id",
-        max_pushdown_ids: int = 2_000_000,
+        max_pushdown_ids: int = PUSHDOWN_IDS_MAX,
     ) -> DataFrame:
         """OpenSearch bool ``filter`` context: the structured filter
         restricts the hit set but NEVER contributes to the score (and never
@@ -434,120 +312,18 @@ class IndexReader:
         Execution is adaptive on the filter's selectivity (Lucene leads
         with the filter iterator for the same reason): a filter of
         ≤ ``max_pushdown_ids`` docs is collected and pushed into the
-        per-segment scorer as a candidate pre-filter (shipped as ONE
-        broadcast per executor on the distributed path), so only
-        surviving docs are ever scored — per-doc BM25 is independent of
-        other docs, so the scores are bit-identical either way. A wider
-        filter is never collected: its ids are partitioned per segment
-        via the docs table and cogrouped with the postings, so the
-        per-segment scorer still pre-filters before scoring
-        (:meth:`_cogrouped_filtered_scores`)."""
-        ids = filter_ids.select(F.col(id_col).alias("doc_id"))
-        n_filter = ids.count()
-        if n_filter == 0:
-            return self.spark.createDataFrame(
-                [], "doc_id long, score double"
-            )
-        if n_filter <= max_pushdown_ids:
-            allowed = np.sort(
-                np.array(
-                    [r["doc_id"] for r in ids.distinct().collect()],
-                    dtype=np.int64,
-                )
-            )
-            qterms = sorted(Counter(tokenize_py(query)).items())
-            n_docs, avgdl = self._stats
-            empty = self.spark.createDataFrame(
-                [], "doc_id long, score double"
-            )
-            if not qterms or n_docs == 0:
-                return empty
-            dfs = self.term_stats([t for t, _ in qterms])
-            if mode == "and" and any(t not in dfs for t, _ in qterms):
-                return empty
-            qterms = [(t, q) for t, q in qterms if t in dfs]
-            if not qterms:
-                return empty
-            weights = {t: q * bm25_idf(n_docs, dfs[t]) for t, q in qterms}
-            if sum(dfs[t] for t, _ in qterms) <= 2_000_000:
-                scorer = _make_segment_scorer(
-                    weights, avgdl, self.k1, self.b, k, mode,
-                    self.block_size, restrict_ids=allowed,
-                )
-                rows = self._local_topk([t for t, _ in qterms], scorer, k)
-                if not rows:
-                    return empty
-                pdf = pd.DataFrame(
-                    rows, columns=["doc_id", "score"]
-                ).astype({"doc_id": "int64", "score": "float64"})
-                return self.spark.createDataFrame(
-                    pdf, "doc_id long, score double"
-                )
-            # distributed: ship the id array ONCE per executor
-            scorer = _make_segment_scorer(
-                weights, avgdl, self.k1, self.b, k, mode, self.block_size,
-                restrict_ids=self._track_broadcast(
-                    self.spark.sparkContext.broadcast(allowed)
-                ),
-            )
-            out = (
-                self.postings([t for t, _ in qterms])
-                .groupBy("seg")
-                .applyInPandas(scorer, schema="doc_id long, score double")
-            )
-            return out.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-        # wide filter: partition the filter ids per segment through the
-        # docs table and cogroup them with that segment's postings — the
-        # per-segment scorer pre-filters its posting lists, so only
-        # filter∩match docs are ever scored (never the full match set),
-        # and nothing is collected to the driver
-        qterms = sorted(Counter(tokenize_py(query)).items())
-        n_docs, avgdl = self._stats
-        empty = self.spark.createDataFrame([], "doc_id long, score double")
-        if not qterms or n_docs == 0:
-            return empty
-        dfs = self.term_stats([t for t, _ in qterms])
-        if mode == "and" and any(t not in dfs for t, _ in qterms):
-            return empty
-        qterms = [(t, q) for t, q in qterms if t in dfs]
-        if not qterms:
-            return empty
-        weights = {t: q * bm25_idf(n_docs, dfs[t]) for t, q in qterms}
-        k1, b_, bs = self.k1, self.b, self.block_size  # no `self` in the
-        out = self._cogrouped_filtered_scores(    # shipped closure
-            [t for t, _ in qterms], ids,
-            lambda rid: _make_segment_scorer(
-                weights, avgdl, k1, b_, k, mode, bs, restrict_ids=rid,
-            ),
-        )
-        return out.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-
-    def _cogrouped_filtered_scores(
-        self, fetch_terms: list[str], ids: DataFrame, make_scorer
-    ) -> DataFrame:
-        """Wide-filter scoring cut (VERDICT r4 #10): (seg, doc_id) rows of
-        the filter — derived by semi-joining the docs table, both sides
-        keyed — cogroup with that segment's postings; ``make_scorer(rid)``
-        builds the per-segment scorer with the segment's own sorted
-        restrict array, so candidate selection and scoring only ever see
-        filter-surviving docs. Scores are unchanged by construction
-        (per-doc BM25 is independent of other docs)."""
-        filt = (
-            self.store.read_docs(self.spark, self._segments, with_seg=True)
-            .select("seg", "doc_id")
-            .join(ids.select("doc_id").distinct(), "doc_id", "left_semi")
-        )
-
-        def score_cogroup(post_pdf: pd.DataFrame,
-                          filt_pdf: pd.DataFrame) -> pd.DataFrame:
-            rid = np.sort(filt_pdf["doc_id"].to_numpy(np.int64)) \
-                if len(filt_pdf) else np.empty(0, dtype=np.int64)
-            return make_scorer(rid)(post_pdf)
-
-        return (
-            self.postings(fetch_terms).groupBy("seg")
-            .cogroup(filt.groupBy("seg"))
-            .applyInPandas(score_cogroup, schema="doc_id long, score double")
+        kernel as a candidate pre-filter (shipped as ONE broadcast per
+        executor on the distributed path), so only surviving docs are
+        ever scored — per-doc BM25 is independent of other docs, so the
+        scores are bit-identical either way. A wider filter is never
+        collected: its ids are partitioned per segment via the docs table
+        and cogrouped with the postings, so the kernel still pre-filters
+        before scoring."""
+        return self._run_segments(
+            *self._compile(Counter(tokenize_py(query)), mode=mode, k=k),
+            LOCAL_POSTINGS_MAX,
+            (filter_ids.select(F.col(id_col).alias("doc_id")),
+             max_pushdown_ids),
         )
 
     def search_after(
@@ -578,80 +354,31 @@ class IndexReader:
         query: str,
         min_match: int,
         k: int = 10,
-        local_threshold: int = 2_000_000,
+        local_threshold: int = LOCAL_POSTINGS_MAX,
     ) -> DataFrame:
         """OpenSearch ``minimum_should_match``: a doc matches when at least
         ``min_match`` DISTINCT query terms occur in it; the score sums BM25
-        over the matched terms. Candidate selection is one unique-with-
-        counts over the term posting lists per segment (ids are unique per
-        list, so the count IS the distinct-term count); same adaptive
-        local/distributed split as :meth:`search`."""
-        qterms = sorted(set(tokenize_py(query)))
-        n_docs, avgdl = self._stats
-        empty = self.spark.createDataFrame([], "doc_id long, score double")
-        if not qterms or n_docs == 0 or min_match < 1:
-            return empty
-        dfs = self.term_stats(qterms)
-        present = [t for t in qterms if t in dfs]
-        if len(present) < min_match:
-            return empty
-        weights = {t: bm25_idf(n_docs, dfs[t]) for t in present}
-        scorer = _make_msm_segment_scorer(
-            weights, min_match, avgdl, self.k1, self.b, k
+        over the matched terms. Same adaptive local/distributed split as
+        :meth:`search`."""
+        return self._run_segments(
+            *self._compile(dict.fromkeys(tokenize_py(query), 1),
+                           min_should_match=min_match, k=k),
+            local_threshold,
         )
-        if sum(dfs[t] for t in present) <= local_threshold:
-            rows = self._local_topk(present, scorer, k)
-            if not rows:
-                return empty
-            pdf = pd.DataFrame(rows, columns=["doc_id", "score"]).astype(
-                {"doc_id": "int64", "score": "float64"}
-            )
-            return self.spark.createDataFrame(pdf, "doc_id long, score double")
-        local_topk = (
-            self.postings(present)
-            .groupBy("seg")
-            .applyInPandas(scorer, schema="doc_id long, score double")
-        )
-        return local_topk.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
     def search_boosted(
         self,
         boosts: dict[str, float],
         k: int = 10,
-        local_threshold: int = 2_000_000,
+        local_threshold: int = LOCAL_POSTINGS_MAX,
     ) -> DataFrame:
         """Per-term query-time boosts (OpenSearch ``term^boost``): the
         term's weight is boost·idf — everything else (candidates, top-k,
         tie-break, adaptive split) is :meth:`search` with mode='or'."""
-        n_docs, avgdl = self._stats
-        empty = self.spark.createDataFrame([], "doc_id long, score double")
-        terms = sorted(boosts)
-        if not terms or n_docs == 0:
-            return empty
-        dfs = self.term_stats(terms)
-        present = [t for t in terms if t in dfs]
-        if not present:
-            return empty
-        weights = {
-            t: float(boosts[t]) * bm25_idf(n_docs, dfs[t]) for t in present
-        }
-        scorer = _make_segment_scorer(
-            weights, avgdl, self.k1, self.b, k, "or", self.block_size
+        return self._run_segments(
+            *self._compile({t: float(v) for t, v in boosts.items()}, k=k),
+            local_threshold,
         )
-        if sum(dfs[t] for t in present) <= local_threshold:
-            rows = self._local_topk(present, scorer, k)
-            if not rows:
-                return empty
-            pdf = pd.DataFrame(rows, columns=["doc_id", "score"]).astype(
-                {"doc_id": "int64", "score": "float64"}
-            )
-            return self.spark.createDataFrame(pdf, "doc_id long, score double")
-        local_topk = (
-            self.postings(present)
-            .groupBy("seg")
-            .applyInPandas(scorer, schema="doc_id long, score double")
-        )
-        return local_topk.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
     def search_dis_max(
         self,
@@ -1168,51 +895,21 @@ class IndexReader:
     def match_docs(self, query: str, mode: str = "or") -> DataFrame:
         """doc_ids matching the query (OR: any term; AND: all terms) as a
         DataFrame — the index-side match set that OpenSearch-style
-        aggregations (facets) and filters compose with."""
-        qterms = sorted(set(tokenize_py(query)))
-        if not qterms:
-            return self.spark.createDataFrame([], "doc_id long")
-        if mode == "and":
-            return self.match_docs_all_terms(qterms)
-
-        def or_docs(pdf: pd.DataFrame) -> pd.DataFrame:
-            decoded = _decode_rows(pdf)
-            if not decoded:
-                return pd.DataFrame({"doc_id": pd.Series([], dtype="int64")})
-            ids = np.unique(
-                np.concatenate([v[0] for v in decoded.values()])
-            )
-            return pd.DataFrame({"doc_id": ids.astype("int64")})
-
-        return (
-            self.postings(qterms)
-            .groupBy("seg")
-            .applyInPandas(or_docs, schema="doc_id long")
+        aggregations (facets) and filters compose with. Always the
+        distributed path: a whole match set is never collected."""
+        return self._run_segments(
+            *self._compile(dict.fromkeys(tokenize_py(query), 1), mode=mode,
+                           output="ids"),
+            0,
         )
 
     def match_docs_all_terms(self, terms: list[str]) -> DataFrame:
         """doc_ids containing ALL terms (AND semantics), as a DataFrame —
         the index-side candidate set for phrase/filter queries."""
-        counter_schema = "doc_id long"
-
-        def and_docs(pdf: pd.DataFrame) -> pd.DataFrame:
-            decoded = _decode_rows(pdf)
-            if any(t not in decoded for t in terms):
-                return pd.DataFrame({"doc_id": pd.Series([], dtype="int64")})
-            cand = None
-            for t in sorted(terms, key=lambda t: decoded[t][0].size):
-                ids = decoded[t][0]
-                cand = ids if cand is None else cand[np.isin(cand, ids)]
-                if cand.size == 0:
-                    break
-            if cand is None or cand.size == 0:
-                return pd.DataFrame({"doc_id": pd.Series([], dtype="int64")})
-            return pd.DataFrame({"doc_id": cand.astype("int64")})
-
-        return (
-            self.postings(list(terms))
-            .groupBy("seg")
-            .applyInPandas(and_docs, schema=counter_schema)
+        return self._run_segments(
+            *self._compile(dict.fromkeys(terms, 1), mode="and",
+                           output="ids"),
+            0,
         )
 
     def score_matches(
@@ -1223,40 +920,20 @@ class IndexReader:
     ) -> DataFrame:
         """EXACT BM25 scores for EVERY matching doc (no top-k cut) as a
         DataFrame — the substrate for analytics that need the full hit
-        list (field collapsing, score histograms). Per-segment numpy
-        scoring exactly as :meth:`search`; with an unbounded k the
-        MaxScore threshold stays 0, so no candidate is pruned.
+        list (field collapsing, score histograms). The kernel runs per
+        segment in Spark (a whole match set is never collected); with an
+        unbounded k (``None``) every candidate is scored — no MaxScore
+        pruning, no cut.
 
         ``stats_override = (n_docs, avgdl, dfs)`` scores with EXTERNAL
         statistics instead of this index's own — the dfs_query_then_fetch
         substrate (:func:`search_across` merges per-index stats into a
         global set and passes them here, so scores match a single
         combined index exactly)."""
-        qterms = sorted(Counter(tokenize_py(query)).items())
-        if stats_override is not None:
-            n_docs, avgdl, dfs_all = stats_override
-        else:
-            n_docs, avgdl = self._stats
-        empty = self.spark.createDataFrame([], "doc_id long, score double")
-        if not qterms or n_docs == 0:
-            return empty
-        if stats_override is not None:
-            dfs = {t: dfs_all[t] for t, _ in qterms if dfs_all.get(t)}
-        else:
-            dfs = self.term_stats([t for t, _ in qterms])
-        if mode == "and" and any(t not in dfs for t, _ in qterms):
-            return empty
-        qterms = [(t, q) for t, q in qterms if t in dfs]
-        if not qterms:
-            return empty
-        weights = {t: qtf * bm25_idf(n_docs, dfs[t]) for t, qtf in qterms}
-        scorer = _make_segment_scorer(
-            weights, avgdl, self.k1, self.b, 1 << 60, mode, self.block_size
-        )
-        return (
-            self.postings([t for t, _ in qterms])
-            .groupBy("seg")
-            .applyInPandas(scorer, schema="doc_id long, score double")
+        return self._run_segments(
+            *self._compile(Counter(tokenize_py(query)), mode=mode,
+                           k=None, stats=stats_override),
+            0,
         )
 
     def search_collapse(
@@ -1445,72 +1122,190 @@ class IndexReader:
                 self._rows_bytes += nbytes
         return frames
 
-    def _local_topk(self, terms: list[str], scorer, k: int):
-        """Coordinator-side scatter-gather: memoized postings fetch →
-        per-segment numpy scoring (same function as the distributed
-        path) → global top-k merge."""
-        frames = self._fetch_rows(terms)
-        nonempty = [f for f in frames.values() if len(f)]
-        if not nonempty:
-            return []
-        allrows = pd.concat(nonempty, ignore_index=True)
-        outs = [scorer(g) for _, g in allrows.groupby("seg", sort=False)]
-        outs = [o for o in outs if len(o)]
+    def _compile(
+        self,
+        qweights: dict[str, float],
+        *,
+        mode: str = "or",
+        must: list[str] | tuple[str, ...] = (),
+        must_not: list[str] | tuple[str, ...] = (),
+        min_should_match: int = 1,
+        k: int | None = 10,
+        output: str = "topk",
+        stats: tuple[int, float, dict[str, int]] | None = None,
+    ) -> tuple[QuerySpec, list[str], dict[str, int]]:
+        """Compile one query into ``(spec, fetch_terms, dfs)``.
+
+        ``qweights`` maps each query term to its multiplier (qtf or
+        boost); a term's weight is multiplier · idf. ``mode="and"`` makes
+        every query term a ``must`` term. ``stats = (n_docs, avgdl, dfs)``
+        replaces this index's statistics (see :meth:`score_matches`).
+        When no doc can match — no query term, an empty index, a missing
+        ``must`` term or fewer present terms than ``min_should_match`` —
+        ``fetch_terms`` is empty and the executor returns an empty
+        result without reading postings."""
+        if mode not in ("or", "and"):
+            raise ValueError(f"mode must be 'or' or 'and', got {mode!r}")
+        if stats is None:
+            n_docs, avgdl = self._stats
+        else:
+            n_docs, avgdl, dfs_all = stats
+        spec = QuerySpec({}, avgdl, self.k1, self.b, self.block_size,
+                         k=k, output=output)
+        if not qweights or n_docs == 0 or min_should_match < 1:
+            return spec, [], {}
+        terms = sorted(set(qweights) | set(must_not))
+        dfs = (
+            self.term_stats(terms) if stats is None
+            else {t: dfs_all[t] for t in terms if dfs_all.get(t)}
+        )
+        must = sorted(qweights) if mode == "and" else sorted(must)
+        present = [t for t in sorted(qweights) if t in dfs]
+        if any(t not in dfs for t in must) or len(present) < min_should_match:
+            return spec, [], dfs
+        not_present = sorted(t for t in set(must_not) if t in dfs)
+        spec = QuerySpec(
+            {t: qweights[t] * bm25_idf(n_docs, dfs[t]) for t in present},
+            avgdl, self.k1, self.b, self.block_size, tuple(must),
+            tuple(not_present), min_should_match, k, output,
+        )
+        return spec, sorted(present + not_present), dfs
+
+    def _run_segments(
+        self,
+        spec: QuerySpec,
+        terms: list[str],
+        dfs: dict[str, int],
+        local_threshold: int,
+        filter: tuple[DataFrame, int] | None = None,
+    ):
+        """The one executor: runs :func:`score_segment` over every
+        segment holding ``terms`` and merges the outputs — the k best
+        (doc_id, score) rows, every matching doc_id, or (``count``) the
+        number of matches as an int.
+
+        ``filter = (ids, max_pushdown_ids)`` restricts the hits to the
+        ``doc_id`` column of ``ids`` (filter context). Paths:
+
+        - a filter wider than ``max_pushdown_ids`` is never collected: its
+          ids are partitioned per segment through the docs table (a keyed
+          semi-join) and cogrouped with that segment's postings, so the
+          kernel restricts its lists before selecting candidates;
+        - the coordinator path, when Σdf of ``terms`` ≤
+          ``local_threshold``: :meth:`_coordinator`, with a narrow
+          filter's sorted id array as the restrict array;
+        - the distributed path otherwise: ``groupBy(seg).applyInPandas``
+          over the pushed-down postings scan, a narrow filter's ids
+          shipped as ONE broadcast per executor."""
+        if not terms:
+            return self._empty(spec)
+        schema = _OUTPUT_SCHEMAS[spec.output]
+        restrict = None
+        if filter is not None:
+            ids, max_pushdown_ids = filter
+            n_filter = ids.count()
+            if n_filter == 0:
+                return self._empty(spec)
+            if n_filter > max_pushdown_ids:
+                filt = (
+                    self.store.read_docs(self.spark, self._segments,
+                                         with_seg=True)
+                    .select("seg", "doc_id")
+                    .join(ids.select("doc_id").distinct(), "doc_id",
+                          "left_semi")
+                )
+
+                def score_cogroup(post_pdf: pd.DataFrame,
+                                  filt_pdf: pd.DataFrame) -> pd.DataFrame:
+                    rid = np.sort(filt_pdf["doc_id"].to_numpy(np.int64)) \
+                        if len(filt_pdf) else np.empty(0, dtype=np.int64)
+                    return score_segment(spec, post_pdf, rid)
+
+                return self._merge(spec, (
+                    self.postings(terms).groupBy("seg")
+                    .cogroup(filt.groupBy("seg"))
+                    .applyInPandas(score_cogroup, schema=schema)
+                ))
+            restrict = np.sort(np.array(
+                [r["doc_id"] for r in ids.distinct().collect()],
+                dtype=np.int64,
+            ))
+        if sum(dfs[t] for t in terms) <= local_threshold:
+            out = self._coordinator(spec, terms, restrict)
+            if spec.output == "count":
+                return int(out["n"].sum())
+            if not len(out):
+                return self._empty(spec)
+            return self.spark.createDataFrame(out, schema)
+        if restrict is not None:
+            restrict = self._track_broadcast(
+                self.spark.sparkContext.broadcast(restrict)
+            )
+        return self._merge(spec, (
+            self.postings(terms).groupBy("seg")
+            .applyInPandas(lambda pdf: score_segment(spec, pdf, restrict),
+                           schema=schema)
+        ))
+
+    def _coordinator(
+        self, spec: QuerySpec, terms: list[str], restrict=None
+    ) -> pd.DataFrame:
+        """The executor's coordinator path: memoized postings fetch →
+        :func:`score_segment` per segment → merged output (the global
+        top-k by ``lexsort`` for a top-k spec; one ``n`` row per segment
+        for a count)."""
+        frames = [f for f in self._fetch_rows(terms).values() if len(f)]
+        outs = []
+        if frames:
+            rows = pd.concat(frames, ignore_index=True)
+            outs = [
+                out for _, g in rows.groupby("seg", sort=False)
+                if len(out := score_segment(spec, g, restrict))
+            ]
         if not outs:
-            return []
-        merged = pd.concat(outs, ignore_index=True)
-        ids = merged["doc_id"].to_numpy()
-        scores = merged["score"].to_numpy()
-        order = np.lexsort((ids, -scores))[:k]
-        return [
-            (int(ids[i]), float(scores[i])) for i in order
-        ]
+            return _empty_output(spec)
+        out = pd.concat(outs, ignore_index=True)
+        if spec.output == "topk":
+            order = np.lexsort(
+                (out["doc_id"].to_numpy(), -out["score"].to_numpy())
+            )[:spec.k]
+            out = out.iloc[order].reset_index(drop=True)
+        return out
+
+    def _merge(self, spec: QuerySpec, per_segment: DataFrame):
+        """Spark-side merge of the per-segment kernel outputs."""
+        if spec.output == "topk" and spec.k is not None:
+            return per_segment.orderBy(
+                F.desc("score"), F.asc("doc_id")
+            ).limit(spec.k)
+        if spec.output == "count":
+            return int(
+                per_segment.agg(F.coalesce(F.sum("n"), F.lit(0)).alias("n"))
+                .collect()[0]["n"]
+            )
+        return per_segment
+
+    def _empty(self, spec: QuerySpec):
+        if spec.output == "count":
+            return 0
+        return self.spark.createDataFrame([], _OUTPUT_SCHEMAS[spec.output])
 
     def match_count(
         self,
         query: str,
         mode: str = "or",
-        local_threshold: int = 2_000_000,
+        local_threshold: int = LOCAL_POSTINGS_MAX,
     ) -> int:
         """Number of matching docs (D7) without scoring — the same
         adaptive split as :meth:`search`: under ``local_threshold``
         summed postings the count runs coordinator-local over the (row-
-        cached) postings with the identical per-segment counter; above
-        it, distributed per segment (segments are doc-disjoint, so the
-        counts sum)."""
-        qterms = sorted(set(tokenize_py(query)))
-        if not qterms:
-            return 0
-        counter = _make_segment_counter(qterms, mode)
-        dfs = self.term_stats(qterms)
-        if mode == "and" and any(t not in dfs for t in qterms):
-            return 0
-        if not dfs:
-            return 0
-        if sum(dfs.values()) <= local_threshold:
-            total = 0
-            rows = self._local_rows(sorted(dfs))
-            if rows is None or not len(rows):
-                return 0
-            for _, g in rows.groupby("seg", sort=False):
-                total += int(counter(g)["n"].iloc[0])
-            return total
-        p = self.postings(qterms)
-        out = (
-            p.groupBy("seg")
-            .applyInPandas(counter, schema="n long")
-            .agg(F.coalesce(F.sum("n"), F.lit(0)).alias("n"))
-            .collect()[0]
+        cached) postings; above it, per segment in Spark (segments are
+        doc-disjoint, so the counts sum)."""
+        return self._run_segments(
+            *self._compile(dict.fromkeys(tokenize_py(query), 1), mode=mode,
+                           output="count"),
+            local_threshold,
         )
-        return int(out["n"])
-
-    def _local_rows(self, terms: list[str]) -> pd.DataFrame | None:
-        """Concatenated memoized rows of ``terms`` (shared _fetch_rows
-        cache)."""
-        frames = [f for f in self._fetch_rows(terms).values() if len(f)]
-        if not frames:
-            return None
-        return pd.concat(frames, ignore_index=True)
 
 
 _NO_MATCH_POS = 1 << 31
@@ -1816,7 +1611,10 @@ def _restrict_to_lists(
     """Keep only docs in sorted ``allowed`` in every posting list,
     recomputing per-block max-tf so MaxScore bounds stay valid — the
     filter-context candidate pushdown (inverse of
-    :func:`_exclude_from_lists`)."""
+    :func:`_exclude_from_lists`). An empty ``allowed`` (a segment none
+    of the filter's docs live in) empties every list."""
+    if allowed.size == 0:
+        return {}
     out = {}
     for t, (ids, tfs, dls, bmax) in decoded.items():
         j = np.searchsorted(allowed, ids)
@@ -1874,56 +1672,118 @@ def _resolve_restrict(restrict_ids):
         else restrict_ids
 
 
-def _make_segment_scorer(
-    weights: dict[str, float],
-    avgdl: float,
-    k1: float,
-    b: float,
-    k: int,
-    mode: str,
-    block_size: int,
-    restrict_ids=None,
-):
-    empty = pd.DataFrame(
-        {"doc_id": pd.Series([], dtype="int64"),
-         "score": pd.Series([], dtype="float64")}
-    )
+@dataclass(frozen=True)
+class QuerySpec:
+    """One compiled query — everything :func:`score_segment` needs.
 
-    def score_segment(pdf: pd.DataFrame) -> pd.DataFrame:
-        decoded = _decode_rows(pdf)
-        restrict_arr = _resolve_restrict(restrict_ids)
-        if restrict_arr is not None and decoded:
-            # filter context: drop non-surviving docs BEFORE candidate
-            # selection and scoring (per-doc BM25 is independent of other
-            # docs, so surviving scores are unchanged)
-            decoded = _restrict_to_lists(decoded, restrict_arr, block_size)
-        if not decoded:
-            return empty
-        if mode == "and":
-            # a doc in this segment can only match ALL query terms if every
-            # query term has a posting list here (segments are doc-disjoint)
-            if any(t not in decoded for t in weights):
-                return empty
-            cand = None
-            for term in sorted(decoded, key=lambda t: decoded[t][0].size):
-                ids = decoded[term][0]
-                cand = ids if cand is None else cand[np.isin(cand, ids)]
-                if cand.size == 0:
-                    break
-            if cand is None or cand.size == 0:
-                return empty
-        else:
-            cand = _maxscore_candidates(
-                decoded, weights, avgdl, k1, b, k, block_size
-            )
-        scores = _exact_scores(cand, decoded, weights, avgdl, k1, b)
-        # local top-k with the same deterministic tie-break as the global merge
-        order = np.lexsort((cand, -scores))[:k]
-        return pd.DataFrame(
-            {"doc_id": cand[order].astype("int64"), "score": scores[order]}
+    ``weights`` maps each scoring term present in the index to its
+    weight (qtf · boost · idf). A doc is a candidate when it holds every
+    ``must`` term, no ``must_not`` term and, without ``must``, at least
+    ``min_should_match`` weighted terms. ``output`` is ``"topk"`` (the
+    ``k`` best ``(doc_id, score)`` rows; every match when ``k`` is
+    ``None``), ``"ids"`` (every matching doc_id) or ``"count"`` (one
+    ``n`` row)."""
+
+    weights: dict[str, float]
+    avgdl: float
+    k1: float
+    b: float
+    block_size: int
+    must: tuple[str, ...] = ()
+    must_not: tuple[str, ...] = ()
+    min_should_match: int = 1
+    k: int | None = 10
+    output: str = "topk"
+
+
+def _empty_output(spec: QuerySpec) -> pd.DataFrame:
+    if spec.output == "count":
+        return pd.DataFrame({"n": [0]})
+    if spec.output == "ids":
+        return pd.DataFrame({"doc_id": pd.Series([], dtype="int64")})
+    return pd.DataFrame({"doc_id": pd.Series([], dtype="int64"),
+                         "score": pd.Series([], dtype="float64")})
+
+
+def score_segment(
+    spec: QuerySpec, pdf: pd.DataFrame, restrict=None
+) -> pd.DataFrame:
+    """The per-segment kernel: decode one segment's packed posting rows,
+    select the candidates ``spec`` admits and emit its output.
+
+    Candidate rules:
+
+    - ``restrict`` (a sorted id array, or a broadcast of one) is filter
+      context: every list (must_not included) is cut to it FIRST, with
+      block-max recomputed; per-doc BM25 is independent of other docs, so
+      the survivors' scores are unchanged;
+    - with ``must`` terms: the must lists intersect smallest-first, then
+      ``must_not`` docs are dropped;
+    - otherwise ``must_not`` docs leave every scoring list first
+      (:func:`_exclude_from_lists`), then ``min_should_match ≥ 2`` keeps
+      the docs in that many lists (one unique-with-counts — ids are
+      unique per list), a bounded top-k keeps MaxScore/block-max
+      pruning (:func:`_maxscore_candidates`, exact), and every other
+      output takes the whole union.
+
+    Candidates are scored by :func:`_exact_scores` in sorted-term order
+    and cut to the local top-k with the global merge's (score desc,
+    doc_id asc) tie-break."""
+    decoded = _decode_rows(pdf)
+    restrict = _resolve_restrict(restrict)
+    if restrict is not None and decoded:
+        decoded = _restrict_to_lists(decoded, restrict, spec.block_size)
+    lists = {t: v for t, v in decoded.items() if t in spec.weights}
+    if not lists:
+        return _empty_output(spec)
+    if spec.must:
+        # segments are doc-disjoint: a doc here can hold every must term
+        # only if every must term has a posting list here
+        if any(t not in decoded for t in spec.must):
+            return _empty_output(spec)
+        cand = None
+        for t in sorted(spec.must, key=lambda t: decoded[t][0].size):
+            ids = decoded[t][0]
+            cand = ids if cand is None else cand[np.isin(cand, ids)]
+            if cand.size == 0:
+                return _empty_output(spec)
+        for t in spec.must_not:
+            if t in decoded and cand.size:
+                cand = cand[~np.isin(cand, decoded[t][0])]
+    else:
+        lists = _exclude_from_lists(
+            lists, decoded, spec.must_not, spec.block_size
         )
-
-    return score_segment
+        if not lists:
+            return _empty_output(spec)
+        if spec.min_should_match >= 2:
+            if len(lists) < spec.min_should_match:
+                return _empty_output(spec)
+            cand, cnt = np.unique(
+                np.concatenate([v[0] for v in lists.values()]),
+                return_counts=True,
+            )
+            cand = cand[cnt >= spec.min_should_match]
+        elif spec.output == "topk" and spec.k is not None:
+            cand = _maxscore_candidates(
+                lists, spec.weights, spec.avgdl, spec.k1, spec.b, spec.k,
+                spec.block_size,
+            )
+        else:
+            cand = np.unique(np.concatenate([v[0] for v in lists.values()]))
+    if spec.output == "count":
+        return pd.DataFrame({"n": [int(cand.size)]})
+    if cand.size == 0:
+        return _empty_output(spec)
+    if spec.output == "ids":
+        return pd.DataFrame({"doc_id": cand.astype("int64")})
+    scores = _exact_scores(
+        cand, lists, spec.weights, spec.avgdl, spec.k1, spec.b
+    )
+    order = np.lexsort((cand, -scores))[:spec.k]
+    return pd.DataFrame(
+        {"doc_id": cand[order].astype("int64"), "score": scores[order]}
+    )
 
 
 def _maxscore_candidates(
@@ -1997,74 +1857,6 @@ def _maxscore_candidates(
     return cand
 
 
-def _make_bool_segment_scorer(
-    weights: dict[str, float],
-    must_terms: list[str],
-    not_terms: list[str],
-    avgdl: float,
-    k1: float,
-    b: float,
-    k: int,
-    block_size: int = 128,
-    restrict_ids=None,
-):
-    empty = pd.DataFrame(
-        {"doc_id": pd.Series([], dtype="int64"),
-         "score": pd.Series([], dtype="float64")}
-    )
-
-    def score_segment(pdf: pd.DataFrame) -> pd.DataFrame:
-        decoded = _decode_rows(pdf)
-        restrict_arr = _resolve_restrict(restrict_ids)
-        if restrict_arr is not None and decoded:
-            # bool filter clause: restrict every list (must/should/not)
-            # before any candidate logic — scores of survivors unchanged
-            decoded = _restrict_to_lists(decoded, restrict_arr, block_size)
-            if not decoded:
-                return empty
-        score_decoded = {t: v for t, v in decoded.items() if t in weights}
-        if not score_decoded:
-            return empty
-        if must_terms:
-            if any(t not in decoded for t in must_terms):
-                return empty
-            cand = None
-            for term in sorted(must_terms,
-                               key=lambda t: decoded[t][0].size):
-                ids = decoded[term][0]
-                cand = ids if cand is None else cand[np.isin(cand, ids)]
-                if cand.size == 0:
-                    return empty
-            for t in not_terms:
-                if t in decoded and cand.size:
-                    cand = cand[~np.isin(cand, decoded[t][0])]
-            if cand.size == 0:
-                return empty
-        else:
-            # should-only: prune with MaxScore instead of exact-scoring the
-            # full OR union. must_not is applied to the posting lists FIRST
-            # (block-max recomputed on the filtered lists) so the threshold
-            # θ is a valid lower bound on the k-th best score of the final
-            # (post-exclusion) result set — pruning stays exact.
-            score_decoded = _exclude_from_lists(
-                score_decoded, decoded, not_terms, block_size
-            )
-            if not score_decoded:
-                return empty
-            cand = _maxscore_candidates(
-                score_decoded, weights, avgdl, k1, b, k, block_size
-            )
-        if cand.size == 0:
-            return empty
-        scores = _exact_scores(cand, score_decoded, weights, avgdl, k1, b)
-        order = np.lexsort((cand, -scores))[:k]
-        return pd.DataFrame(
-            {"doc_id": cand[order].astype("int64"), "score": scores[order]}
-        )
-
-    return score_segment
-
-
 def _exclude_from_lists(
     score_decoded: dict,
     decoded: dict,
@@ -2094,62 +1886,6 @@ def _exclude_from_lists(
         starts = np.arange(0, ids.size, block_size)
         out[t] = (ids, tfs, dls, np.maximum.reduceat(tfs, starts))
     return out
-
-
-def _make_msm_segment_scorer(
-    weights: dict[str, float],
-    min_match: int,
-    avgdl: float,
-    k1: float,
-    b: float,
-    k: int,
-):
-    """minimum_should_match candidate selection + exact scoring: a doc is
-    a candidate iff it appears in ≥ ``min_match`` of the term posting
-    lists (each list's ids are unique, so one unique-with-counts over the
-    concatenation counts distinct matched terms)."""
-    empty = pd.DataFrame(
-        {"doc_id": pd.Series([], dtype="int64"),
-         "score": pd.Series([], dtype="float64")}
-    )
-
-    def score_segment(pdf: pd.DataFrame) -> pd.DataFrame:
-        decoded = _decode_rows(pdf)
-        sd = {t: v for t, v in decoded.items() if t in weights}
-        if len(sd) < min_match:
-            return empty
-        allids = np.concatenate([v[0] for v in sd.values()])
-        cand, cnt = np.unique(allids, return_counts=True)
-        cand = cand[cnt >= min_match]
-        if cand.size == 0:
-            return empty
-        scores = _exact_scores(cand, sd, weights, avgdl, k1, b)
-        order = np.lexsort((cand, -scores))[:k]
-        return pd.DataFrame(
-            {"doc_id": cand[order].astype("int64"), "score": scores[order]}
-        )
-
-    return score_segment
-
-
-def _make_segment_counter(qterms: list[str], mode: str):
-    def count_segment(pdf: pd.DataFrame) -> pd.DataFrame:
-        decoded = _decode_rows(pdf)
-        if not decoded:
-            return pd.DataFrame({"n": [0]})
-        if mode == "and":
-            if any(t not in decoded for t in qterms):
-                return pd.DataFrame({"n": [0]})
-            cand = None
-            for t in qterms:
-                ids = decoded[t][0]
-                cand = ids if cand is None else cand[np.isin(cand, ids)]
-            n = int(cand.size)
-        else:
-            n = int(np.unique(np.concatenate([v[0] for v in decoded.values()])).size)
-        return pd.DataFrame({"n": [n]})
-
-    return count_segment
 
 
 def brute_force_bm25(

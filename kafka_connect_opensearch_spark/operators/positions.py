@@ -952,11 +952,9 @@ class PositionsReader:
     reads exactly the active segments, so merges/deletes are visible the
     moment their manifest commits)."""
 
-    def __init__(self, spark: SparkSession, index_dir: str,
-                 use_dsv2: bool = False):
+    def __init__(self, spark: SparkSession, index_dir: str):
         self.spark = spark
         self.store = SegmentStore(index_dir)
-        self._use_dsv2 = use_dsv2
         meta = self.store.meta()
         if not meta.get("positions"):
             raise ValueError(
@@ -975,9 +973,7 @@ class PositionsReader:
         self._term_cache: dict[str, tuple] = {}
         self._cache_values = 0
         self._group_ids: dict[tuple[str, int], int] = {}
-        self._scan_files: dict[str, list] = {}  # DSv2 pinned file lists
         self._df_cache: dict[str, DataFrame] = {}  # resolved-scan reuse
-        self._dsv2_ok: bool | None = None
         # canonical keying (see _CANON_M block): doc enumeration + per-
         # term prebuilt key arrays, all snapshot-scoped
         self._doc_ranks: np.ndarray | bool | None = None
@@ -992,7 +988,6 @@ class PositionsReader:
         self._term_cache.clear()
         self._cache_values = 0
         self._group_ids.clear()
-        self._scan_files = {}
         self._df_cache = {}
         self._doc_ranks = None
         self._canon_cache.clear()
@@ -1314,28 +1309,10 @@ class PositionsReader:
         )
 
     def _spark_rows(self, terms: list[str]) -> DataFrame:
-        """Distributed read of the query terms' rows. Default: cached
-        resolved parquet scan (listed/resolved once per manifest
-        snapshot) with the term filter pushed to the scan — row groups
-        pruned by the sorted layout. With ``use_dsv2=True``: the DSv2
-        segment relation (ONE BatchScan, filter absorbed as
-        PushedFilters; sources/segment_scan.py) — plan-pinned but
-        measured slower (BENCH/DSV2.md), so opt-in."""
-        from kafka_connect_opensearch_spark.sources import segment_scan
-
-        if self._use_dsv2 and self._dsv2_ok is not False:
-            if "positions" not in self._scan_files:
-                self._scan_files["positions"] = segment_scan.segment_files(
-                    self.store, self._segments, "positions"
-                )
-            try:
-                df = segment_scan.scan_df(
-                    self.spark, "positions", self._scan_files["positions"]
-                )
-                self._dsv2_ok = True
-                return df.filter(F.col("term").isin(list(terms)))
-            except Exception:
-                self._dsv2_ok = False
+        """Distributed read of the query terms' rows: the resolved parquet
+        scan, cached per manifest snapshot (listed/resolved once), with
+        the term filter pushed to the scan — row groups pruned by the
+        sorted layout."""
         if "positions" not in self._df_cache:
             self._df_cache["positions"] = self.store.read_positions(
                 self.spark, self._segments

@@ -23,35 +23,10 @@ from kafka_connect_opensearch_spark.config import POSTINGS_BLOCK_SIZE
 
 
 def varint_encode(values: np.ndarray) -> bytes:
-    """LEB128-encode a uint64 array, vectorized.
-
-    Byte i of each value is ``(v >> 7i) & 0x7f``, with the continuation bit
-    set on all but the last byte. We compute per-value byte counts, then
-    scatter bytes by output offset — the only Python loop is over the ≤10
-    byte positions.
-    """
-    v = np.ascontiguousarray(values, dtype=np.uint64)
-    if v.size == 0:
-        return b""
-    # number of 7-bit groups per value: max(1, ceil(bitlen/7))
-    bits = np.zeros(v.shape, dtype=np.int64)
-    tmp = v.copy()
-    while True:
-        nz = tmp != 0
-        if not nz.any():
-            break
-        bits[nz] += 1
-        tmp >>= np.uint64(7)
-    nbytes = np.maximum(bits, 1)
-    offsets = np.concatenate(([0], np.cumsum(nbytes)))
-    out = np.zeros(int(offsets[-1]), dtype=np.uint8)
-    maxb = int(nbytes.max())
-    for i in range(maxb):
-        mask = nbytes > i
-        chunk = (v[mask] >> np.uint64(7 * i)) & np.uint64(0x7F)
-        cont = (nbytes[mask] - 1 > i).astype(np.uint8) << 7
-        out[offsets[:-1][mask] + i] = chunk.astype(np.uint8) | cont
-    return out.tobytes()
+    """LEB128-encode a uint64 array, vectorized: the single-group case of
+    :func:`varint_encode_grouped`."""
+    out = varint_encode_grouped(values, np.zeros(1, dtype=np.int64))
+    return out[0] if out else b""
 
 
 def varint_encode_grouped(
@@ -59,13 +34,16 @@ def varint_encode_grouped(
 ) -> list[bytes]:
     """Encode ``values`` once, then split the byte stream per group.
 
-    ``group_starts``: sorted start indices (first must be 0). One
-    vectorized encode pass + per-group byte slicing — replaces per-group
-    encode calls in hot paths.
+    Byte i of each value is ``(v >> 7i) & 0x7f``, with the continuation bit
+    set on all but the last byte. We compute per-value byte counts, then
+    scatter bytes by output offset — the only Python loop is over the ≤10
+    byte positions. ``group_starts``: sorted start indices (first must be
+    0); each group's bytes are one slice of the shared stream.
     """
     v = np.ascontiguousarray(values, dtype=np.uint64)
     if v.size == 0:
         return []
+    # number of 7-bit groups per value: max(1, ceil(bitlen/7))
     bits = np.zeros(v.shape, dtype=np.int64)
     tmp = v.copy()
     while True:

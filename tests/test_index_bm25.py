@@ -172,16 +172,49 @@ def test_search_bool_matches_bruteforce(spark, index_dir, corpus_pdf):
 
 
 def test_match_count_parity(spark, index_dir, corpus_pdf):
+    """match_count and match_docs (OR and AND) equal the brute-force match
+    sets."""
     reader = IndexReader(spark, index_dir)
-    texts = corpus_pdf["content"].tolist()
-    # OR count
-    n_or = sum(1 for t in texts if ("ident_1" in t.split() or "ident_2" in t.split()))
-    assert reader.match_count("ident_1 ident_2", "or") == n_or
-    n_and = sum(
-        1 for t in texts if ("ident_1" in t.split() and "ident_2" in t.split())
-    )
-    assert reader.match_count("ident_1 ident_2", "and") == n_and
+    toks = [set(t.split()) for t in corpus_pdf["content"]]
+    ids = corpus_pdf["doc_id"].tolist()
+    q = {"ident_1", "ident_2"}
+    want = {
+        "or": sorted(d for d, ts in zip(ids, toks, strict=True) if q & ts),
+        "and": sorted(d for d, ts in zip(ids, toks, strict=True) if q <= ts),
+    }
+    for mode, want_ids in want.items():
+        assert reader.match_count("ident_1 ident_2", mode) == len(want_ids)
+        got = reader.match_docs("ident_1 ident_2", mode=mode).collect()
+        assert sorted(r["doc_id"] for r in got) == want_ids
+    got = reader.match_docs_all_terms(sorted(q)).collect()
+    assert sorted(r["doc_id"] for r in got) == want["and"]
     assert reader.match_count("nosuchtoken_xyz", "or") == 0
+
+
+@pytest.mark.parametrize("entry", [
+    "match_count", "match_docs", "score_matches", "search_filtered",
+    "search_after", "search_dis_max", "function_score_field",
+])
+def test_misspelled_mode_is_rejected(spark, index_dir, entry):
+    """Every entry point that takes ``mode`` rejects anything but "or" /
+    "and" — a misspelled "AND" must not silently run as OR."""
+    reader = IndexReader(spark, index_dir)
+    docs = reader.docs().select("doc_id", "dl")
+    calls = {
+        "match_count": lambda m: reader.match_count("return import", m),
+        "match_docs": lambda m: reader.match_docs("return import", m),
+        "score_matches": lambda m: reader.score_matches("return import", m),
+        "search_filtered": lambda m: reader.search_filtered(
+            "return import", docs, mode=m),
+        "search_after": lambda m: reader.search_after(
+            "return import", 1.0, 0, mode=m),
+        "search_dis_max": lambda m: reader.search_dis_max(
+            ["return", "import"], mode=m),
+        "function_score_field": lambda m: reader.function_score_field(
+            "return import", docs, "dl", mode=m),
+    }
+    with pytest.raises(ValueError, match="mode"):
+        calls[entry]("AND")
 
 
 def test_resume_from_checkpoint(spark, tmp_path, corpus_pdf):
@@ -500,9 +533,11 @@ def test_search_min_should_match_bruteforce(spark, index_dir, corpus_pdf):
         )
     idx = np.nonzero(nmatch >= m)[0]
     sel = idx[np.lexsort((ids[idx], -scores[idx]))[:10]]
-    got = reader.search_min_should_match(query, m, k=10).toPandas()
-    assert got["doc_id"].tolist() == ids[sel].tolist()
-    np.testing.assert_array_equal(got["score"].to_numpy(), scores[sel])
+    for kwargs in ({}, {"local_threshold": 0}):  # coordinator, distributed
+        got = reader.search_min_should_match(query, m, k=10,
+                                             **kwargs).toPandas()
+        assert got["doc_id"].tolist() == ids[sel].tolist()
+        np.testing.assert_array_equal(got["score"].to_numpy(), scores[sel])
     # msm=1 degenerates to plain OR search
     or_hits = reader.search(query, k=10, mode="or").toPandas()
     msm1 = reader.search_min_should_match(query, 1, k=10).toPandas()
@@ -545,6 +580,11 @@ def test_search_boosted_scales_weights(spark, index_dir, corpus_pdf):
     sel = idx[np.lexsort((ids[idx], -scores[idx]))[:10]]
     got = reader.search_boosted(boosts, k=10).toPandas()
     assert got["doc_id"].tolist() == ids[sel].tolist()
+    # distributed path (local_threshold=0): bit-equal to the coordinator
+    dist = reader.search_boosted(boosts, k=10, local_threshold=0).toPandas()
+    assert dist["doc_id"].tolist() == got["doc_id"].tolist()
+    np.testing.assert_array_equal(dist["score"].to_numpy(),
+                                  got["score"].to_numpy())
 
 
 def test_search_after_pagination_no_overlap_no_gap(spark, index_dir):
@@ -868,6 +908,21 @@ def test_search_filtered_pushdown_and_fallback_agree(spark, index_dir,
     # empty filter short-circuits
     empty = spark.createDataFrame([], "doc_id long")
     assert reader.search_filtered("return", empty, k=5).count() == 0
+
+
+def test_wide_filter_absent_from_some_segments(spark, index_dir):
+    """A wide (cogrouped) filter whose docs live in only one segment: the
+    other segments get an empty restrict array and contribute nothing,
+    and the rows equal the selective-pushdown path."""
+    reader = IndexReader(spark, index_dir)
+    seg_docs = reader.store.read_docs(spark, reader._segments,  # noqa: SLF001
+                                      with_seg=True)
+    one_seg = seg_docs.select("seg").orderBy("seg").first()["seg"]
+    fdf = seg_docs.filter(F.col("seg") == one_seg).select("doc_id")
+    wide = reader.search_filtered("return import", fdf, k=10,
+                                  max_pushdown_ids=0).collect()
+    push = reader.search_filtered("return import", fdf, k=10).collect()
+    assert [tuple(r) for r in wide] == [tuple(r) for r in push] and push
 
 
 def test_search_bool_filter_clause(spark, index_dir, corpus_pdf):

@@ -302,63 +302,6 @@ def test_wide_filter_scores_cogrouped_not_full_match_set(spark, tmp_path):
         [tuple(r) for r in boolp.collect()]
 
 
-def test_distributed_paths_use_single_pushed_segment_scan(spark, tmp_path):
-    """Round-5 pin (VERDICT r4 #1): the distributed search AND phrase
-    paths read through the DSv2 segment relation — ONE BatchScan node,
-    `term IN (...)` fully absorbed (PushedFilters, no residual Filter),
-    no per-layout Union — and return exactly the classic union-read
-    rows."""
-    from kafka_connect_opensearch_spark.config import EngineConfig
-    from kafka_connect_opensearch_spark.operators.bm25 import IndexReader
-    from kafka_connect_opensearch_spark.operators.indexer import build_index
-    from kafka_connect_opensearch_spark.operators.positions import (
-        PositionsReader,
-    )
-
-    rows = [(i, "alpha beta gamma" if i % 2 else "alpha delta")
-            for i in range(40)]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    d = str(tmp_path / "idx")
-    cfg = EngineConfig(num_segments=2, salt_partitions=2,
-                       shuffle_partitions=4, index_positions=True)
-    build_index(spark, docs, d, cfg, content_col="text",
-                doc_id_col="doc_id")
-
-    reader = IndexReader(spark, d, use_dsv2=True)
-    q = reader.postings(["alpha", "beta"])
-    plan = plans.executed_plan(q)
-    fmt = plans.explain_formatted(q)
-    assert "BatchScan kcos_segments" in plan
-    assert "PushedFilters" in fmt and "In(term" in fmt
-    assert "Union" not in plan
-    # absorbed, not re-applied: no Filter NODE above the scan
-    assert "+- Filter" not in plan and ") Filter" not in plan
-    got = sorted((r["term"], r["seg"], r["df"]) for r in q.collect())
-    want = sorted(
-        (r["term"], r["seg"], r["df"])
-        for r in reader.store.read_postings(spark, reader._segments)
-        .filter(F.col("term").isin(["alpha", "beta"])).collect()
-    )
-    assert got == want and got
-
-    pr = PositionsReader(spark, d, use_dsv2=True)
-    q2 = pr._spark_rows(["alpha", "gamma"])
-    plan2 = plans.executed_plan(q2)
-    fmt2 = plans.explain_formatted(q2)
-    assert "BatchScan kcos_segments" in plan2
-    assert "PushedFilters" in fmt2 and "In(term" in fmt2
-    assert "Union" not in plan2
-    assert "+- Filter" not in plan2 and ") Filter" not in plan2
-    got2 = sorted((r["term"], r["seg"], int(r["part"]), int(r["n_docs"]))
-                  for r in q2.collect())
-    want2 = sorted(
-        (r["term"], r["seg"], int(r["part"]), int(r["n_docs"]))
-        for r in pr.store.read_positions(spark, pr._segments)
-        .filter(F.col("term").isin(["alpha", "gamma"])).collect()
-    )
-    assert got2 == want2 and got2
-
-
 def test_sequence_chunks_has_no_single_partition_window(spark):
     """The global token prefix-sum must never funnel the corpus through
     one task: the running window is PARTITIONED by the deterministic
